@@ -48,7 +48,7 @@ HEADLINE = [
     "dedup_simhash",
     "dedup_clusters",       # connected components over candidate pairs
     "dedup_embedding_cosine",  # cell-blocked near-dup pairs (materializes
-                               # the shared pair table _NEAR_PAIR_CACHE)
+                               # the shared, session-memoized pair table)
     "dedup_semantic",       # SemDeDup survivor selection over the SAME
                             # pair table (production shape: pairs built
                             # once, consumed by both emitters)

@@ -39,7 +39,6 @@ from pdf_extractor_spark.core.refs import (
     CONTEXT_CLOSE,
     CONTEXT_OPEN,
     MAX_DEPTH,
-    detect_ref,
 )
 
 PARSED_SCHEMA = T.StructType([
@@ -310,14 +309,6 @@ def _merge_block_edges(spans: DataFrame, block_size: int) -> DataFrame:
 # --------------------------------------------------------------------------
 # Stage 3 — bounded-fixpoint reference resolution (3 left joins)
 # --------------------------------------------------------------------------
-
-@F.pandas_udf(T.StringType())
-def _detect_ref_udf(question: pd.Series, answer: pd.Series) -> pd.Series:
-    return pd.Series(
-        [detect_ref(q or "", a or "") for q, a in zip(question, answer)],
-        dtype="object",
-    )
-
 
 # JVM form of core.refs.detect_ref (REF_ID_PATTERNS, refs.py): both
 # patterns end with the id capture group at a zero-width boundary, so the

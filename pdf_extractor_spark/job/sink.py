@@ -211,7 +211,28 @@ def run_resumable(
 
     ``fail_after_batches`` injects a crash after N committed batches —
     the test hook mirroring /root/reference/simulate_interrupt.py.
+
+    Batch ids map to buckets by ``bucket % n_batches``, so a batch id
+    committed under one (n_buckets, n_batches) covers different buckets
+    under another: a resume with other counts would skip uncommitted
+    buckets or commit some a second time.  The counts are persisted in
+    ``_LAYOUT.json`` at the output-dir root (it outlives the staging
+    delete) before the first batch, and a mismatch is a hard error that
+    leaves the output dir untouched.
     """
+    layout = {"n_buckets": n_buckets, "n_batches": n_batches}
+    layout_path = os.path.join(out_dir, "_LAYOUT.json")
+    if os.path.exists(layout_path):
+        with open(layout_path) as f:
+            stored = json.load(f)
+        if stored != layout:
+            raise ValueError(
+                f"output dir {out_dir} was started with "
+                f"n_buckets={stored['n_buckets']}, "
+                f"n_batches={stored['n_batches']}; run requested "
+                f"n_buckets={n_buckets}, n_batches={n_batches}; resume "
+                "with the original counts or clear the output dir"
+            )
     done = committed_batches(spark, out_dir)
     groups: dict[int, list[int]] = {}
     for b in range(n_buckets):
@@ -226,6 +247,11 @@ def run_resumable(
         corpus_dir, staged_schema = stage_corpus(
             transcripts, out_dir, n_buckets
         )
+        if not os.path.exists(layout_path):
+            tmp = layout_path + ".tmp"
+            with open(tmp, "w") as f:
+                json.dump(layout, f)
+            os.replace(tmp, layout_path)
     for batch_id in todo:
         batch_in = batch_input(spark, corpus_dir, groups[batch_id],
                                schema=staged_schema)

@@ -15,14 +15,20 @@ Conventions that make the driver's order-insensitive value-hash stable:
   is HUGEINT, Spark is LONG);
 - timestamps cross the boundary as ``epoch_us`` BIGINT
   (Spark ``unix_micros`` ≙ DuckDB ``epoch_us``).
+
+Work that several queries of one driver session share (fingerprint and
+pair tables, embedding fits, quantile thresholds, the sink run) is
+memoized through ``session_memo``, keyed by the live application id.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable, Optional, Union
+from typing import Callable, Optional, TypeVar, Union
 
 from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 
 @dataclass(frozen=True)
@@ -68,23 +74,31 @@ def free_checkpoint(df: DataFrame) -> None:
         pass
 
 
-def evict_stale_session_entries(cache: dict, spark: SparkSession) -> None:
-    """Drop cache entries keyed by a (applicationId, …) tuple whose
-    application is no longer the live SparkContext.
+# the one per-session memo: (applicationId, *key) -> value
+_MEMO: dict = {}
 
-    The query modules memoize checkpointed frames / fitted literals per
-    (applicationId, sf_dir).  Without eviction, a long-lived process that
-    stops and restarts sessions accumulates stale DataFrame handles
-    forever, and each live entry pins its localCheckpoint's RDD blocks
-    for the application lifetime.  Call this at every cache access: one
-    dict sweep, frees checkpoints of dead-app entries best-effort (their
-    blocks died with the app; the unpersist is a no-op that clears the
-    JVM handle)."""
+
+def session_memo(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
+    """``build()`` once per (live Spark application, ``key``), then reuse.
+
+    The query modules memoize checkpointed frames, fitted literals and
+    sink output dirs per session.  Every access first drops the entries
+    of applications that are no longer the live SparkContext, so a
+    long-lived process that stops and restarts sessions does not
+    accumulate stale DataFrame handles; a dropped DataFrame also has its
+    localCheckpoint released (its blocks died with the app; the unpersist
+    only clears the JVM handle).  ``build`` may itself call
+    ``session_memo`` (a pair table built over a memoized fingerprint
+    table); a ``build`` that raises stores nothing."""
     app = spark.sparkContext.applicationId
-    for key in [k for k in cache if k[0] != app]:
-        val = cache.pop(key)
+    for k in [k for k in _MEMO if k[0] != app]:
+        val = _MEMO.pop(k)
         if isinstance(val, DataFrame):
             free_checkpoint(val)
+    full_key = (app, *key)
+    if full_key not in _MEMO:
+        _MEMO[full_key] = build()
+    return _MEMO[full_key]
 
 
 def sql_escape(s: str) -> str:

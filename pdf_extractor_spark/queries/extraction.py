@@ -41,8 +41,8 @@ from pdf_extractor_spark.gen.transcripts import generate_transcripts
 from pdf_extractor_spark.job.extract import run_extract
 from pdf_extractor_spark.queries.base import (
     Q,
-    evict_stale_session_entries,
     load,
+    session_memo,
     xor_checksum,
 )
 
@@ -90,12 +90,6 @@ def _extract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the resumable-sink output dir per Spark app: the sink run is the
-# expensive part (stage + 4 batch jobs); every audit_consistency call in
-# a session reads the same committed output
-_SINK_CACHE: dict = {}
-
-
 def _audit_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X1/S14 exactly-once lineage as a driver-hash-checked INVARIANT:
     run the resumable batch sink (job/sink.py — stage, per-batch commit,
@@ -109,17 +103,18 @@ def _audit_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays self-consistent.  ≙ the reference's checkpoint bookkeeping
     (/root/reference/src/checkpoint.py:22-78) promoted to a queryable
     lineage table."""
+    import tempfile
+
     from pdf_extractor_spark.job import sink
 
-    evict_stale_session_entries(_SINK_CACHE, spark)
-    key = spark.sparkContext.applicationId
-    if key not in _SINK_CACHE:
-        import tempfile
-
+    def run_sink() -> str:
         out = tempfile.mkdtemp(prefix="audit_consistency_")
         sink.run_resumable(spark, transcripts_df(spark), out)
-        _SINK_CACHE[key] = out
-    out = _SINK_CACHE[key]
+        return out
+
+    # the sink run is the expensive part (stage + 4 batch jobs): every
+    # audit_consistency call in a session reads the same committed output
+    out = session_memo(spark, ("audit_consistency_sink",), run_sink)
     audit = sink.read_audit(spark, out).select(
         F.col("bucket").cast("int").alias("bucket"),
         F.col("batch").cast("int").alias("batch"),

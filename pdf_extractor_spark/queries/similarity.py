@@ -45,10 +45,10 @@ from pdf_extractor_spark.core import kmeans
 from pdf_extractor_spark.core import pq as pqspec
 from pdf_extractor_spark.queries.base import (
     Q,
-    evict_stale_session_entries,
     load,
     rhu,
     rhu_sql,
+    session_memo,
 )
 
 _N_QUERIES = 5
@@ -142,9 +142,30 @@ SELECT q_id, rank, n_id, score FROM (
 """
 
 
-# fitted centroids per (Spark app, sf_dir) — the fit is deterministic, so
-# caching only saves the repeated sample scan + driver fit within a session
-_FIT_CACHE: dict[tuple[str, str], list[list[float]]] = {}
+def _hash_sample(df: DataFrame, n: int) -> list[tuple[int, list[float]]]:
+    """The embedding fits' sample: the first ``n`` rows of ``df`` in
+    (md5(vec_id), vec_id) order, as driver-side (vec_id, vector) pairs in
+    that order.  ``orderBy(...).limit(n)`` is a TakeOrdered — O(n) per
+    partition and collects exactly n rows at ANY corpus size, so the
+    driver never holds more than n×dim floats."""
+    rows = (
+        df.select(
+            "vec_id", "embedding",
+            F.md5(F.col("vec_id").cast("string")).alias("hk"),
+        )
+        .orderBy("hk", "vec_id")
+        .limit(n)
+        .collect()
+    )
+    return [(r.vec_id, [float(x) for x in r.embedding]) for r in rows]
+
+
+def _fit_kmeans(corpus: DataFrame) -> list[list[float]]:
+    """K from a count() probe, then the deterministic Lloyd fit on the
+    16·K-row hash sample (memoized per session by the callers: that only
+    saves the repeated sample scan + driver fit)."""
+    k = kmeans.n_centroids(corpus.count())
+    return kmeans.fit(_hash_sample(corpus, kmeans.n_fit_sample(k)), k=k)
 
 
 def _fitted_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
@@ -155,30 +176,11 @@ def _fitted_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     expressions.  Scaling K with the corpus (fixed ~128-vector target
     cell size) is what keeps every consumer's within-cell work bounded
     as the corpus grows; the floor keeps sf≤0.1 inputs on the historical
-    K=16/256-sample fit, so the pinned mirror oracles are unchanged.
-    ``orderBy(md5(id), id).limit(n)`` is a TakeOrdered — O(n) per
-    partition and collects exactly n rows at ANY corpus size, so the
-    driver never holds more than n_sample×dim floats."""
-    evict_stale_session_entries(_FIT_CACHE, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _FIT_CACHE:
-        e = load(spark, sf_dir, "embeddings")
-        k = kmeans.n_centroids(e.count())
-        sample = (
-            e.select(
-                "vec_id", "embedding",
-                F.md5(F.col("vec_id").cast("string")).alias("hk"),
-            )
-            .orderBy("hk", "vec_id")
-            .limit(kmeans.n_fit_sample(k))
-            .collect()
-        )
-        # rows arrive hash-ordered (the fit spec's sample order)
-        _FIT_CACHE[key] = kmeans.fit(
-            [(r.vec_id, [float(x) for x in r.embedding]) for r in sample],
-            k=k,
-        )
-    return _FIT_CACHE[key]
+    K=16/256-sample fit, so the pinned mirror oracles are unchanged."""
+    return session_memo(
+        spark, ("centroids", sf_dir),
+        lambda: _fit_kmeans(load(spark, sf_dir, "embeddings")),
+    )
 
 
 def _sql_double_lit(x: float) -> str:
@@ -367,34 +369,16 @@ def _expanded_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_SCALED_FIT_CACHE: dict = {}
-
-
 def _scaled_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """The same spec as ``_fitted_centroids`` driven ABOVE the K floor:
     count probe on the derived corpus (a narrow scan of the base table —
     at scale the count is base_count × 5, known without a scan), K from
     the corpus-scaled rule, 16·K-row hash-bounded TakeOrdered sample,
     deterministic driver Lloyd fit."""
-    evict_stale_session_entries(_SCALED_FIT_CACHE, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SCALED_FIT_CACHE:
-        corpus = _expanded_corpus(spark, sf_dir)
-        k = kmeans.n_centroids(corpus.count())
-        sample = (
-            corpus.select(
-                "vec_id", "embedding",
-                F.md5(F.col("vec_id").cast("string")).alias("hk"),
-            )
-            .orderBy("hk", "vec_id")
-            .limit(kmeans.n_fit_sample(k))
-            .collect()
-        )
-        _SCALED_FIT_CACHE[key] = kmeans.fit(
-            [(r.vec_id, [float(x) for x in r.embedding]) for r in sample],
-            k=k,
-        )
-    return _SCALED_FIT_CACHE[key]
+    return session_memo(
+        spark, ("scaled_centroids", sf_dir),
+        lambda: _fit_kmeans(_expanded_corpus(spark, sf_dir)),
+    )
 
 
 def _ann_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -415,32 +399,18 @@ def _ann_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- IVF-PQ (compressed ANN)
 
-_PQ_FIT_CACHE: dict = {}
-
-
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
     """Product-quantizer codebooks (core/pq.py spec): the same
     hash-ordered TakeOrdered sample rule as the coarse-quantizer fit —
     256 rows to the driver at ANY corpus size — then a deterministic
-    per-subspace Lloyd fit.  Cached per (app, sf_dir) like the centroid
+    per-subspace Lloyd fit.  Memoized per (app, sf_dir) like the centroid
     fit; the codebooks land in the query plan as literal matrices."""
-    evict_stale_session_entries(_PQ_FIT_CACHE, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_FIT_CACHE:
-        e = load(spark, sf_dir, "embeddings")
-        sample = (
-            e.select(
-                "vec_id", "embedding",
-                F.md5(F.col("vec_id").cast("string")).alias("hk"),
-            )
-            .orderBy("hk", "vec_id")
-            .limit(pqspec.N_PQ_SAMPLE)
-            .collect()
-        )
-        _PQ_FIT_CACHE[key] = pqspec.fit_codebooks(
-            [(r.vec_id, [float(x) for x in r.embedding]) for r in sample]
-        )
-    return _PQ_FIT_CACHE[key]
+    return session_memo(
+        spark, ("pq_codebooks", sf_dir),
+        lambda: pqspec.fit_codebooks(_hash_sample(
+            load(spark, sf_dir, "embeddings"), pqspec.N_PQ_SAMPLE
+        )),
+    )
 
 
 def _sq_l2_fold(a, b) -> Column:
@@ -767,18 +737,14 @@ def _near_dup_pairs(cells: DataFrame) -> DataFrame:
 # dedup_embedding_cosine and dedup_semantic both consume it (pair
 # emission vs survivor selection over the SAME pairs) — the first caller
 # materializes it once, the production "materialize the pair table, then
-# decide" shape (same rationale as dedup.py's _PAIR_CACHE)
-_NEAR_PAIR_CACHE: dict = {}
-
-
+# decide" shape (same rationale as dedup.py's _minhash_pairs_cached)
 def _near_dup_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    evict_stale_session_entries(_NEAR_PAIR_CACHE, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NEAR_PAIR_CACHE:
-        _NEAR_PAIR_CACHE[key] = _near_dup_pairs(
+    return session_memo(
+        spark, ("near_dup_pairs", sf_dir),
+        lambda: _near_dup_pairs(
             _jittered_cells(spark, sf_dir)
-        ).localCheckpoint(eager=False)
-    return _NEAR_PAIR_CACHE[key]
+        ).localCheckpoint(eager=False),
+    )
 
 
 def _dedup_cosine_sql() -> str:

@@ -29,10 +29,10 @@ from pyspark.sql import functions as F
 from pdf_extractor_spark.core.normalize import UNICODE_TO_LATEX
 from pdf_extractor_spark.queries.base import (
     Q,
-    evict_stale_session_entries,
     load,
     rhu,
     rhu_sql,
+    session_memo,
     sql_escape,
 )
 
@@ -366,11 +366,6 @@ FROM m
 _BIN_FIT_SAMPLE = 256
 _BIN_PCTS = (0.25, 0.50, 0.75)
 
-# quartile thresholds per (Spark app, sf_dir) — the fit is deterministic,
-# caching only saves the repeated sample scan within a session
-_BIN_CACHE: dict[tuple[str, str], list[float]] = {}
-
-
 def _bin_thresholds(spark: SparkSession, sf_dir: str) -> list[float]:
     """Quartile thresholds of ``quality_score`` from a deterministic
     hash-bounded sample — the same fit pattern as the IVF quantizer
@@ -384,31 +379,33 @@ def _bin_thresholds(spark: SparkSession, sf_dir: str) -> list[float]:
     size — and the thresholds are exact percentile_disc quantiles OF THE
     SAMPLE (1-based rank ``ceil(p·n)`` of the ascending scores).  The
     oracle SQL re-derives the same sample and ranks independently, so
-    the fit spec itself is hash-gated."""
-    evict_stale_session_entries(_BIN_CACHE, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BIN_CACHE:
-        import math
+    the fit spec itself is hash-gated.  The fit is deterministic;
+    memoizing it per session only saves the repeated sample scan."""
+    return session_memo(
+        spark, ("bin_thresholds", sf_dir),
+        lambda: _fit_bin_thresholds(load(spark, sf_dir, "documents")),
+    )
 
-        d = load(spark, sf_dir, "documents")
-        c = quality_cols()
-        rows = (
-            d.select(
-                c["quality_score"].alias("s"),
-                F.md5(F.col("doc_id").cast("string")).alias("hk"),
-                "doc_id",
-            )
-            .orderBy("hk", "doc_id")
-            .limit(_BIN_FIT_SAMPLE)
-            .collect()
+
+def _fit_bin_thresholds(d: DataFrame) -> list[float]:
+    import math
+
+    rows = (
+        d.select(
+            quality_cols()["quality_score"].alias("s"),
+            F.md5(F.col("doc_id").cast("string")).alias("hk"),
+            "doc_id",
         )
-        scores = sorted(float(r.s) for r in rows)
-        n = len(scores)
-        _BIN_CACHE[key] = [
-            scores[max(0, math.ceil(p * n) - 1)] if n else 0.0
-            for p in _BIN_PCTS
-        ]
-    return _BIN_CACHE[key]
+        .orderBy("hk", "doc_id")
+        .limit(_BIN_FIT_SAMPLE)
+        .collect()
+    )
+    scores = sorted(float(r.s) for r in rows)
+    n = len(scores)
+    return [
+        scores[max(0, math.ceil(p * n) - 1)] if n else 0.0
+        for p in _BIN_PCTS
+    ]
 
 
 def _quality_bins(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,27 +17,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 from pdf_extractor_spark.job.extract import run_extract
+from pdf_extractor_spark.job.session import get_spark
 
 
 def main() -> None:
     cores = int(sys.argv[1])
     corpus = sys.argv[2]
-    spark = (
-        SparkSession.builder.appName(f"bench-extract-{cores}")
-        .master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-        .config("spark.sql.files.maxPartitionBytes", "8m")
-        .config("spark.sql.files.openCostInBytes", "1m")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        f"bench-extract-{cores}", cores=cores, shuffle_partitions=64
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -280,13 +280,43 @@ def test_dup_passages_hand_corpus(spark, tmp_path):
     assert got[58] == (3, 0, 0.0)
 
 
-def test_evict_stale_session_entries(spark):
-    """Cache entries keyed by a stopped application's id must be dropped
-    at access time (the module caches otherwise accumulate stale frame
-    handles and pinned checkpoints across session restarts)."""
-    from pdf_extractor_spark.queries.base import evict_stale_session_entries
+def test_session_memo(spark, monkeypatch):
+    """The one per-session memo: entries keyed by a stopped application's
+    id must be dropped at access time (stale frame handles and pinned
+    checkpoints otherwise accumulate across session restarts), a live
+    key is built exactly once, and a ``build`` may itself memoize (the
+    pair table is built over the memoized fingerprint table)."""
+    from pdf_extractor_spark.queries import base
+
+    monkeypatch.setattr(base, "_MEMO", {})
+    freed = []
+    monkeypatch.setattr(base, "free_checkpoint", freed.append)
 
     app = spark.sparkContext.applicationId
-    cache = {("app-from-a-stopped-session", "sf"): object(), (app, "sf"): 2}
-    evict_stale_session_entries(cache, spark)
-    assert cache == {(app, "sf"): 2}
+    stale_df = spark.range(1)
+    base._MEMO.update({
+        ("app-from-a-stopped-session", "sf"): object(),
+        ("app-from-a-stopped-session", "df"): stale_df,
+        (app, "sf"): 2,
+    })
+    assert base.session_memo(spark, ("sf",), lambda: 3) == 2
+    assert base._MEMO == {(app, "sf"): 2}
+    assert freed == [stale_df]
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        return len(builds)
+
+    assert base.session_memo(spark, ("once",), build) == 1
+    assert base.session_memo(spark, ("once",), build) == 1
+    assert builds == [1]
+
+    outer = base.session_memo(
+        spark, ("outer",),
+        lambda: base.session_memo(spark, ("inner",), lambda: 10) + 1,
+    )
+    assert outer == 11
+    assert base._MEMO[(app, "inner")] == 10
+    assert base._MEMO[(app, "outer")] == 11

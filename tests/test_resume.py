@@ -217,6 +217,80 @@ def test_stage_corpus_rejects_bucket_count_change(spark, tmp_path):
     assert summary["complete"]
 
 
+def _tree_state(d):
+    """Every directory and file under ``d``, files with size and mtime."""
+    state = {}
+    for root, _, files in os.walk(d):
+        state[root] = None
+        for f in files:
+            st = os.stat(os.path.join(root, f))
+            state[os.path.join(root, f)] = (st.st_size, st.st_mtime_ns)
+    return state
+
+
+def test_resume_rejects_batch_count_change_mid_run(spark, tmp_path):
+    """Batch ids map to buckets by ``bucket % n_batches``: resuming a
+    4-batch run with n_batches=2 would treat committed batch 0 as
+    covering other buckets and silently drop 3 of 12 conversations.
+    Must hard-fail without touching the output dir."""
+    tdf = transcripts_df(spark, n_convs=12, seed=7)
+    out = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_resumable(spark, tdf, out, n_batches=4, fail_after_batches=1)
+    before = _tree_state(out)
+    with pytest.raises(ValueError, match="n_batches=4.*n_batches=2"):
+        run_resumable(spark, tdf, out, n_batches=2)
+    assert _tree_state(out) == before
+
+
+def test_rerun_rejects_batch_count_change_after_complete(spark, tmp_path):
+    """Re-running a completed 4-batch dir with n_batches=8 would re-stage
+    the input and commit batches 4-7 over buckets already committed in
+    batches 0-3 (duplicated rows, ``_COMPLETE`` still written).  Must
+    hard-fail without touching the output dir."""
+    tdf = transcripts_df(spark, n_convs=6, seed=11)
+    out = str(tmp_path / "out")
+    assert run_resumable(spark, tdf, out, n_buckets=8, n_batches=4)[
+        "complete"
+    ]
+    before = _tree_state(out)
+    with pytest.raises(ValueError, match="n_batches=4.*n_batches=8"):
+        run_resumable(spark, tdf, out, n_buckets=8, n_batches=8)
+    assert _tree_state(out) == before
+
+
+def test_audit_consistency_runs_the_sink_once_per_session(
+    spark, monkeypatch
+):
+    """Every audit_consistency call in a session reads the same committed
+    sink output: two calls must run the sink once."""
+    import shutil
+
+    from pdf_extractor_spark.job import sink
+    from pdf_extractor_spark.queries import base
+    from pdf_extractor_spark.queries.extraction import _audit_consistency
+
+    # start from an empty memo: an earlier query in this session may
+    # already hold the sink output
+    monkeypatch.setattr(base, "_MEMO", {})
+    runs = []
+    real_run = sink.run_resumable
+
+    def counting_run(spark, transcripts, out_dir, **kw):
+        runs.append(out_dir)
+        return real_run(spark, transcripts, out_dir, **kw)
+
+    monkeypatch.setattr(sink, "run_resumable", counting_run)
+    try:
+        first = sorted(_audit_consistency(spark, "unused").collect())
+        second = sorted(_audit_consistency(spark, "unused").collect())
+        assert len(runs) == 1
+        assert first == second
+    finally:
+        for d in runs:
+            shutil.rmtree(d, ignore_errors=True)
+
+
 def test_run_resumable_empty_input(spark, tmp_path):
     """A source window that legitimately yields zero rows must commit an
     empty output, not abort on the schema-less staged corpus."""
