@@ -9,9 +9,11 @@ at N and 4N cores (default 2 vs 8; see BENCH.md for why this pair is the
 faithful independent-executor analog on this VM) over a ~2.8M-turn corpus
 to evidence the N→4N scaling-efficiency criterion (BASELINE.md).
 
-Prints ONE JSON line:
+Prints a full JSON record as a preliminary line:
   {"metric": ..., "value": ..., "unit": "sec", "queries": {...}, "sf": ...,
    "extraction": {...}, "scaling": {...}}
+and ends (also when SIGTERMed) with the compact ``summary`` of it — the
+last stdout line is the record, and it stays under 1 KB.
 """
 
 from __future__ import annotations
@@ -153,6 +155,29 @@ BENCH_CONVS = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS", "20000"))
 BENCH_SKEW_TURNS = int(os.environ.get("SPARK_GRAFT_BENCH_SKEW", "8000"))
 
 
+def summary(payload: dict) -> dict:
+    """The compact final record: headline, extraction verdict, scaling
+    verdict.  The per-query and per-pair maps stay in the full preliminary
+    line; this one must fit a tail capture (< 1 KB)."""
+    ext = payload["extraction"]
+    sc = payload["scaling"]
+    pairs = sc.get("pairs", [])
+    out = {k: payload[k] for k in ("metric", "value", "unit", "sf")}
+    out["extraction"] = {
+        k: ext.get(k) for k in ("turns_per_sec", "converged", "window_quiet")
+    }
+    out["scaling"] = {
+        "efficiency": sc.get("efficiency"),
+        "basis": sc.get("basis") or sc.get("status")
+        or ("workers failed" if "error" in sc else None),
+        "n_pairs": len(pairs),
+        "n_accepted": sum(p["accepted"] for p in pairs),
+    }
+    if "note" in sc:
+        out["scaling"]["note"] = sc["note"]
+    return out
+
+
 def main() -> None:
     from pdf_extractor_spark.job.session import get_spark
     from pdf_extractor_spark.queries import QUERIES
@@ -291,10 +316,10 @@ def main() -> None:
 
     _current_worker: dict = {}
 
-    def emit() -> None:
-        print(json.dumps(payload), flush=True)
+    def emit(record: dict) -> None:
+        print(json.dumps(record), flush=True)
 
-    emit()  # preliminary line — superseded by the final emit below
+    emit(payload)  # full preliminary line — the summary below supersedes it
 
     import signal
 
@@ -303,7 +328,7 @@ def main() -> None:
         proc = _current_worker.get("proc")
         if proc is not None and proc.poll() is None:
             proc.kill()
-        emit()
+        emit(summary(payload))
         os._exit(0)
 
     signal.signal(signal.SIGTERM, _on_term)
@@ -527,7 +552,7 @@ def main() -> None:
         if not pairs:
             payload["scaling"] = {"error": results}
 
-    emit()
+    emit(summary(payload))
 
 
 if __name__ == "__main__":

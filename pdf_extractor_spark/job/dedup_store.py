@@ -40,11 +40,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# the commit-lock discipline is shared with the upsert table (one
-# protocol, one recovery contract: a crashed writer leaves a stale lock;
-# upsert.force_unlock clears it after operator review)
+# the pointer-file and commit-lock disciplines are shared with the upsert
+# table (one protocol, one recovery contract: a crashed writer leaves a
+# stale lock; upsert.force_unlock clears it after operator review)
 from pdf_extractor_spark.job.upsert import (
     _acquire_lock,
+    _commit_pointer,
+    _read_pointer,
     _release_lock,
 )
 from pdf_extractor_spark.queries.dedup import band_rows
@@ -65,28 +67,8 @@ def _bands_table(name: str) -> str:
     return f"{name}_bands"
 
 
-def _generation(store_dir: str) -> int | None:
-    """Current compaction generation, or None for a legacy store laid
-    out before generations existed (plain ``fp``/``bands`` subdirs)."""
-    path = os.path.join(store_dir, "_GEN")
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return int(f.read().strip())
-
-
-def _commit_generation(store_dir: str, gen: int) -> None:
-    tmp = os.path.join(store_dir, f"_GEN.tmp-{os.getpid()}")
-    with open(tmp, "w") as f:
-        f.write(f"{gen}\n")
-    os.replace(tmp, os.path.join(store_dir, "_GEN"))
-
-
-def _subdirs(store_dir: str) -> tuple[str, str]:
-    """(fp, bands) physical subdir names for the current generation."""
-    gen = _generation(store_dir)
-    if gen is None:
-        return "fp", "bands"
+def _subdirs(gen: int) -> tuple[str, str]:
+    """(fp, bands) physical subdir names of compaction generation ``gen``."""
     return f"fp-g{gen}", f"bands-g{gen}"
 
 
@@ -103,23 +85,20 @@ def _fingerprints(docs: DataFrame) -> DataFrame:
     )
 
 
-def _write_meta(store_dir: str, n_buckets: int) -> None:
-    os.makedirs(store_dir, exist_ok=True)
-    with open(os.path.join(store_dir, "_N_BUCKETS"), "w") as f:
-        f.write(f"{n_buckets}\n")
-
-
 def _n_buckets(store_dir: str) -> int:
     """The bucket count this store's files were WRITTEN with — a store
     CREATION property persisted in ``_N_BUCKETS`` (like ``_GEN``), read
     by every writer/reader so the physical layout and the catalog DDL
-    can never disagree.  Falls back to the module default for a legacy
-    store created before the marker existed."""
-    path = os.path.join(store_dir, "_N_BUCKETS")
-    if not os.path.exists(path):
-        return N_STORE_BUCKETS
-    with open(path) as f:
-        return int(f.read().strip())
+    can never disagree.  ``create_store`` writes the marker LAST, so a
+    missing marker means no committed store lives here (a wrong path or
+    a crash mid-create): refuse rather than guess a count."""
+    n = _read_pointer(store_dir, "_N_BUCKETS")
+    if n is None:
+        raise ValueError(
+            f"no committed dedup store at {store_dir} (no _N_BUCKETS "
+            "marker); create it with create_store"
+        )
+    return n
 
 
 def create_store(store_dir: str, name: str, docs: DataFrame,
@@ -135,7 +114,7 @@ def create_store(store_dir: str, name: str, docs: DataFrame,
     ``_GEN``, then ``_N_BUCKETS`` LAST — callers (cmd_curate) treat
     ``_N_BUCKETS`` as "store exists", so a crash mid-create leaves no
     marker and the store is simply re-created."""
-    fp_dir, bands_dir = "fp-g0", "bands-g0"
+    fp_dir, bands_dir = _subdirs(0)
     fp = _fingerprints(docs)
     (
         fp.write.format("parquet").mode("overwrite")
@@ -158,8 +137,8 @@ def create_store(store_dir: str, name: str, docs: DataFrame,
         .option("path", os.path.join(store_dir, bands_dir))
         .saveAsTable(_bands_table(name))
     )
-    _commit_generation(store_dir, 0)
-    _write_meta(store_dir, n_buckets)
+    _commit_pointer(store_dir, 0, "_GEN")
+    _commit_pointer(store_dir, n_buckets, "_N_BUCKETS")
 
 
 def open_store(spark: SparkSession, store_dir: str, name: str) -> None:
@@ -173,7 +152,7 @@ def open_store(spark: SparkSession, store_dir: str, name: str) -> None:
     real duplicates as clean — registering with the store's own persisted
     count makes that mismatch unconstructible."""
     stored = _n_buckets(store_dir)
-    fp_dir, bands_dir = _subdirs(store_dir)
+    fp_dir, bands_dir = _subdirs(_read_pointer(store_dir, "_GEN"))
     for table, schema, sub, key in (
         (_fp_table(name), _FP_SCHEMA, fp_dir, "fingerprint"),
         (_bands_table(name), _BANDS_SCHEMA, bands_dir, "band_hash"),
@@ -273,15 +252,14 @@ def compact_store(spark: SparkSession, store_dir: str, name: str,
 
     lock = _acquire_lock(store_dir)
     try:
-        old_fp, old_bands = _subdirs(store_dir)
-        old_gen = _generation(store_dir)
-        new_gen = 0 if old_gen is None else old_gen + 1
         n_buckets = _n_buckets(store_dir)
+        new_gen = _read_pointer(store_dir, "_GEN") + 1
+        old_fp, old_bands = _subdirs(new_gen - 1)
+        keep = new_fp, new_bands = _subdirs(new_gen)
         specs = (
-            (_fp_table(name), _FP_SCHEMA, old_fp, f"fp-g{new_gen}",
-             "fingerprint"),
-            (_bands_table(name), _BANDS_SCHEMA, old_bands,
-             f"bands-g{new_gen}", "band_hash"),
+            (_fp_table(name), _FP_SCHEMA, old_fp, new_fp, "fingerprint"),
+            (_bands_table(name), _BANDS_SCHEMA, old_bands, new_bands,
+             "band_hash"),
         )
         for table, schema, old_sub, sub, key in specs:
             tmp_table = f"{table}__compact"
@@ -313,7 +291,7 @@ def compact_store(spark: SparkSession, store_dir: str, name: str,
                 .saveAsTable(tmp_table)
             )
             spark.sql(f"DROP TABLE {tmp_table}")   # external — files stay
-        _commit_generation(store_dir, new_gen)     # COMMIT POINT
+        _commit_pointer(store_dir, new_gen, "_GEN")   # COMMIT POINT
         for table, *_ in specs:
             spark.sql(f"DROP TABLE IF EXISTS {table}")
         open_store(spark, store_dir, name)
@@ -321,14 +299,8 @@ def compact_store(spark: SparkSession, store_dir: str, name: str,
         # crash after a previous commit but before its cleanup leaves
         # that generation's dirs (corpus-sized signature copies) leaked
         # forever otherwise
-        keep = {f"fp-g{new_gen}", f"bands-g{new_gen}"}
         for d in os.listdir(store_dir):
-            if d in keep:
-                continue
-            if (
-                d.startswith("fp-g") or d.startswith("bands-g")
-                or d in ("fp", "bands")     # legacy pre-generation layout
-            ):
+            if d not in keep and d.startswith(("fp-g", "bands-g")):
                 shutil.rmtree(os.path.join(store_dir, d),
                               ignore_errors=True)
         return new_gen

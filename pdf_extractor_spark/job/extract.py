@@ -4,11 +4,16 @@ Semantic contract = pdf_extractor_spark.core (the oracle); physical plan =
 idiomatic Spark per SURVEY.md §3.1 rebuild lifecycle:
 
   scan → mapInPandas(parse, Arrow batches)          [narrow, no shuffle]
-      → salted block window link + span ids          [1 shuffle on (conv, blk)]
-      → native fold groupBy(conv, blk, span)         [partial agg, same keys]
-      → cross-block boundary merge (edge spans only) [tiny second pass]
+      → salted block id fill + _stitch(conv, blk)    [1 shuffle on (conv, blk)]
+      → _stitch(conv) over edge spans only           [tiny second pass]
       → bounded-fixpoint reference resolution        [3 left joins]
       → prefix strip + sort keys → output
+
+``_stitch`` is the one stitch operator (lag-window gaps-and-islands link,
+then a native groupBy fold): level 1 feeds it one-fragment spans, level 2
+the block-local spans, so both levels run the identical link and fold.
+Every resolve round is the same ``attach`` hop (usable ref → base +
+context + target), the final join included.
 
 Skew design (north_rule "partitioning / shuffle / skew handled
 explicitly"): the level-1 window partitions by (conv_id, turn_idx div B),
@@ -34,6 +39,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pdf_extractor_spark.core.normalize import _SANITIZE_TABLE
 from pdf_extractor_spark.core.parse_turn import parse_turn
 from pdf_extractor_spark.core.refs import (
     CONTEXT_CLOSE,
@@ -77,14 +83,6 @@ DEFAULT_BLOCK_SIZE = 8192
 # Stage 1 — parse (mapInPandas; the only stage that runs extraction code)
 # --------------------------------------------------------------------------
 
-def _sanitize_series(s: pd.Series) -> pd.Series:
-    # one vectorized translate pass (≙ sanitize_latex; see the
-    # order-equivalence proof at core/normalize.py:_SANITIZE_TABLE)
-    from pdf_extractor_spark.core.normalize import _SANITIZE_TABLE
-
-    return s.str.translate(_SANITIZE_TABLE)
-
-
 def parse_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     cols = [f.name for f in PARSED_SCHEMA.fields]
     for pdf in it:
@@ -102,19 +100,38 @@ def parse_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 ))
         out = pd.DataFrame(rows, columns=cols)
         if len(out):
-            out["question_latex"] = _sanitize_series(out["question_latex"])
-            out["answer_latex"] = _sanitize_series(out["answer_latex"])
+            # one vectorized translate pass (≙ sanitize_latex; see the
+            # order-equivalence proof at core/normalize.py:_SANITIZE_TABLE)
+            for c in ("question_latex", "answer_latex"):
+                out[c] = out[c].str.translate(_SANITIZE_TABLE)
         yield out
+
+
+def parse_transcripts(transcripts: DataFrame) -> DataFrame:
+    """Transcript rows (batch or streaming) → PARSED_SCHEMA fragment rows."""
+    from pdf_extractor_spark.shipping import ensure_workers
+
+    ensure_workers(transcripts.sparkSession)
+    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
+        parse_batches, PARSED_SCHEMA
+    )
 
 
 # --------------------------------------------------------------------------
 # Stage 2 — link + stitch (native window / groupBy, two-level for skew)
 # --------------------------------------------------------------------------
 
-_FRAG_FIELDS = [
-    "turn_idx", "seq", "kind", "question_id", "part_id",
-    "question_latex", "answer_latex", "continues_next", "continued_prev",
+# a span row: one fragment at level 1, a block-local span at level 2.
+# (turn_start, head_seq) leads so array_sort orders by document position.
+_SPAN_FIELDS = [
+    "turn_start", "head_seq", "kind", "span_id", "question_latex",
+    "answer_latex", "turn_end", "n_fragments",
+    "head_cont_prev", "tail_cont_next",
 ]
+
+
+def _span_window(keys: list[str]) -> Window:
+    return Window.partitionBy(*keys).orderBy("turn_start", "head_seq")
 
 
 def _fold_merged_question(arr: Column) -> Column:
@@ -132,17 +149,77 @@ def _fold_merged_question(arr: Column) -> Column:
     )
 
 
-def _link_and_stitch_blocks(parsed: DataFrame, block_size: int) -> DataFrame:
-    """Level 1: per-(conv, block) id fill + gaps-and-islands + fold."""
-    df = parsed.withColumn(
-        "blk", F.floor(F.col("turn_idx") / F.lit(block_size)).cast("int")
+def _stitch(spans: DataFrame, keys: list[str]) -> DataFrame:
+    """The one stitch operator, used at both block levels: a span continues
+    its predecessor (in document order within ``keys``) iff its head is
+    open, the predecessor's tail is open, and the predecessor ends on the
+    previous turn (contract step 2, gaps-and-islands); each chain folds
+    into one span (contract step 3) with ``n_fragments`` summed."""
+    w = _span_window(keys)
+    is_cont = (
+        F.col("head_cont_prev")
+        & F.coalesce(F.lag("tail_cont_next").over(w), F.lit(False))
+        & (F.coalesce(F.lag("turn_end").over(w), F.lit(-999))
+           == F.col("turn_start") - 1)
+    )
+    chained = spans.withColumn(
+        "chain_no",
+        F.sum(F.when(is_cont, F.lit(0)).otherwise(F.lit(1))).over(
+            w.rowsBetween(Window.unboundedPreceding, 0)
+        ),
+    )
+    frags = F.col("frags")
+    first = F.element_at(frags, 1)
+    last = F.element_at(frags, -1)
+    return (
+        chained.groupBy(*keys, "chain_no")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct(*[F.col(c) for c in _SPAN_FIELDS]))
+            ).alias("frags")
+        )
+        .select(
+            "conv_id",
+            first["turn_start"].alias("turn_idx"),
+            first["head_seq"].alias("head_seq"),
+            first["kind"].alias("kind"),
+            first["span_id"].alias("span_id"),
+            _fold_merged_question(frags).alias("question_latex"),
+            F.array_join(
+                F.transform(frags, lambda x: x["answer_latex"]), "\n\n"
+            ).alias("answer_latex"),
+            first["turn_start"].alias("turn_start"),
+            last["turn_end"].alias("turn_end"),
+            F.aggregate(
+                frags, F.lit(0), lambda acc, x: acc + x["n_fragments"]
+            ).alias("n_fragments"),
+            first["head_cont_prev"].alias("head_cont_prev"),
+            last["tail_cont_next"].alias("tail_cont_next"),
+        )
     )
 
-    w = Window.partitionBy("conv_id", "blk").orderBy("turn_idx", "seq")
+
+def _link_and_stitch_blocks(parsed: DataFrame, block_size: int) -> DataFrame:
+    """Level 1: per-(conv, block) id fill, then ``_stitch`` within blocks.
+    Each fragment enters as a one-fragment span, so the id fill and the
+    stitch share one window spec (one sort)."""
+    keys = ["conv_id", "blk"]
+    df = parsed.select(
+        "conv_id",
+        F.floor(F.col("turn_idx") / F.lit(block_size)).cast("int")
+        .alias("blk"),
+        F.col("turn_idx").alias("turn_start"),
+        F.col("turn_idx").alias("turn_end"),
+        F.col("seq").alias("head_seq"),
+        "kind", "question_id", "part_id", "question_latex", "answer_latex",
+        F.lit(1).alias("n_fragments"),
+        F.col("continued_prev").alias("head_cont_prev"),
+        F.col("continues_next").alias("tail_cont_next"),
+    )
 
     # --- id fill (contract step 1), block-local part -------------------
     qid_ff_local = F.last("question_id", ignorenulls=True).over(
-        w.rowsBetween(Window.unboundedPreceding, 0)
+        _span_window(keys).rowsBetween(Window.unboundedPreceding, 0)
     )
 
     # cross-block carry: last non-null qid of each block, forward-filled
@@ -151,17 +228,19 @@ def _link_and_stitch_blocks(parsed: DataFrame, block_size: int) -> DataFrame:
     # aggregate — max(struct(...)) would force SortAggregate, which AQE
     # then plans as one task (a measured 7.7s serial straggler at 1M
     # turns).  seq is a within-turn fragment index, far below 1e6.
-    order_key = F.col("turn_idx").cast("long") * F.lit(1_000_000) + F.col("seq")
+    order_key = (
+        F.col("turn_start").cast("long") * F.lit(1_000_000) + F.col("head_seq")
+    )
     block_last = (
         df.filter(F.col("question_id").isNotNull())
-        .groupBy("conv_id", "blk")
+        .groupBy(*keys)
         .agg(F.max_by("question_id", order_key).alias("blk_qid"))
     )
     # carry rows are needed for EVERY block present in df, not only the
     # blocks that themselves contain a qid:
-    blocks = df.select("conv_id", "blk").distinct()
+    blocks = df.select(*keys).distinct()
     carry_all = (
-        blocks.join(block_last, ["conv_id", "blk"], "left")
+        blocks.join(block_last, keys, "left")
         .withColumn(
             "carry_qid",
             F.last("blk_qid", ignorenulls=True).over(
@@ -169,79 +248,26 @@ def _link_and_stitch_blocks(parsed: DataFrame, block_size: int) -> DataFrame:
                 .rowsBetween(Window.unboundedPreceding, -1)
             ),
         )
-        .select("conv_id", "blk", "carry_qid")
+        .select(*keys, "carry_qid")
     )
 
-    df = (
-        df.join(carry_all, ["conv_id", "blk"], "left")
-        .withColumn(
-            "qid_filled",
-            F.when(
-                F.col("question_id").isNull() & F.col("part_id").isNotNull(),
-                F.coalesce(qid_ff_local, F.col("carry_qid")),
-            ).otherwise(F.col("question_id")),
-        )
-        .drop("question_id", "carry_qid")
-        .withColumnRenamed("qid_filled", "question_id")
+    qid = F.when(
+        F.col("question_id").isNull() & F.col("part_id").isNotNull(),
+        F.coalesce(qid_ff_local, F.col("carry_qid")),
+    ).otherwise(F.col("question_id"))
+    # concat is NULL iff the filled id is; one reference to it keeps the
+    # id-fill and link windows collapsible into one Window node
+    span_id = F.coalesce(
+        F.concat(qid, F.coalesce(F.col("part_id"), F.lit(""))),
+        F.concat(F.lit("t"), F.col("turn_start").cast("string")),
     )
-
-    # --- span boundaries (contract step 2), block-local ----------------
-    prev_next = F.lag("continues_next").over(w)
-    prev_turn = F.lag("turn_idx").over(w)
-    is_cont = (
-        F.col("continued_prev")
-        & F.coalesce(prev_next, F.lit(False))
-        & (F.coalesce(prev_turn, F.lit(-999)) == F.col("turn_idx") - 1)
-    )
-    df = df.withColumn(
-        "span_no",
-        F.sum(F.when(is_cont, F.lit(0)).otherwise(F.lit(1))).over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
-
-    # --- fold (contract step 3), native aggregation --------------------
-    arr = F.array_sort(
-        F.collect_list(F.struct(*[F.col(c) for c in _FRAG_FIELDS]))
-    )
-    first = F.element_at(F.col("frags"), 1)
-    last = F.element_at(F.col("frags"), -1)
-
-    spans = (
-        df.groupBy("conv_id", "blk", "span_no")
-        .agg(arr.alias("frags"))
-        .select(
-            "conv_id",
-            first["turn_idx"].alias("turn_idx"),
-            first["seq"].alias("head_seq"),
-            first["kind"].alias("kind"),
-            F.when(
-                first["question_id"].isNotNull(),
-                F.concat(
-                    first["question_id"],
-                    F.coalesce(first["part_id"], F.lit("")),
-                ),
-            ).otherwise(
-                F.concat(F.lit("t"), first["turn_idx"].cast("string"))
-            ).alias("span_id"),
-            _fold_merged_question(F.col("frags")).alias("question_latex"),
-            F.array_join(
-                F.transform(F.col("frags"), lambda x: x["answer_latex"]),
-                "\n\n",
-            ).alias("answer_latex"),
-            first["turn_idx"].alias("turn_start"),
-            last["turn_idx"].alias("turn_end"),
-            F.size("frags").alias("n_fragments"),
-            first["continued_prev"].alias("head_cont_prev"),
-            last["continues_next"].alias("tail_cont_next"),
-        )
-    )
-    return spans
+    df = df.join(carry_all, keys, "left").withColumn("span_id", span_id)
+    return _stitch(df, keys)
 
 
 def _merge_block_edges(spans: DataFrame, block_size: int) -> DataFrame:
-    """Level 2: merge span chains across block edges.  Only spans whose
-    open continuation flag touches a block boundary can participate
+    """Level 2: ``_stitch`` span chains across block edges.  Only spans
+    whose open continuation flag touches a block boundary can participate
     (turn_start % B == 0 with an open head, or (turn_end+1) % B == 0 with
     an open tail) — a bounded set, so the per-conversation window here is
     tiny regardless of conversation length."""
@@ -250,60 +276,9 @@ def _merge_block_edges(spans: DataFrame, block_size: int) -> DataFrame:
         (F.col("head_cont_prev") & (F.col("turn_start") % B == 0))
         | (F.col("tail_cont_next") & ((F.col("turn_end") + 1) % B == 0))
     )
-    candidates = spans.filter(edge)
-    untouched = spans.filter(~edge)
-
-    w = Window.partitionBy("conv_id").orderBy("turn_start", "head_seq")
-    prev_tail = F.lag("tail_cont_next").over(w)
-    prev_end = F.lag("turn_end").over(w)
-    is_cont = (
-        F.col("head_cont_prev")
-        & F.coalesce(prev_tail, F.lit(False))
-        & (F.coalesce(prev_end, F.lit(-999)) == F.col("turn_start") - 1)
+    return spans.filter(~edge).unionByName(
+        _stitch(spans.filter(edge), ["conv_id"])
     )
-    chained = candidates.withColumn(
-        "chain_no",
-        F.sum(F.when(is_cont, F.lit(0)).otherwise(F.lit(1))).over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
-
-    span_fields = [
-        "turn_start", "head_seq", "kind", "span_id", "question_latex",
-        "answer_latex", "turn_end", "n_fragments",
-        "head_cont_prev", "tail_cont_next",
-    ]
-    arr = F.array_sort(
-        F.collect_list(F.struct(*[F.col(c) for c in span_fields]))
-    )
-    first = F.element_at(F.col("frags"), 1)
-    last = F.element_at(F.col("frags"), -1)
-
-    merged = (
-        chained.groupBy("conv_id", "chain_no")
-        .agg(arr.alias("frags"))
-        .select(
-            "conv_id",
-            first["turn_start"].alias("turn_idx"),
-            first["head_seq"].alias("head_seq"),
-            first["kind"].alias("kind"),
-            first["span_id"].alias("span_id"),
-            _fold_merged_question(F.col("frags")).alias("question_latex"),
-            F.array_join(
-                F.transform(F.col("frags"), lambda x: x["answer_latex"]),
-                "\n\n",
-            ).alias("answer_latex"),
-            first["turn_start"].alias("turn_start"),
-            last["turn_end"].alias("turn_end"),
-            F.aggregate(
-                F.col("frags"), F.lit(0),
-                lambda acc, x: acc + x["n_fragments"],
-            ).alias("n_fragments"),
-            first["head_cont_prev"].alias("head_cont_prev"),
-            last["tail_cont_next"].alias("tail_cont_next"),
-        )
-    )
-    return untouched.unionByName(merged.select(*untouched.columns))
 
 
 # --------------------------------------------------------------------------
@@ -366,22 +341,15 @@ def _resolve_references(spans: DataFrame) -> DataFrame:
         "is_rep", F.row_number().over(w) == 1
     ).localCheckpoint(eager=False)
 
-    with_ref = spans.filter(F.col("ref_id").isNotNull()).withColumn(
-        "resolved", F.col("answer_latex")
-    )
+    with_ref = spans.filter(F.col("ref_id").isNotNull())
     # lookup working set: only reps whose span_id is actually referenced
     needed = with_ref.select(
-        F.col("conv_id").alias("l_conv"), F.col("ref_id").alias("l_sid")
+        "conv_id", F.col("ref_id").alias("span_id")
     ).distinct()
     static_lookup = (
         spans.filter("is_rep")
-        .select(
-            F.col("conv_id").alias("l_conv"),
-            F.col("span_id").alias("l_sid"),
-            F.col("answer_latex").alias("l_base"),
-            F.col("ref_id").alias("l_ref"),
-        )
-        .join(needed, ["l_conv", "l_sid"], "left_semi")
+        .select("conv_id", "span_id", "answer_latex", "ref_id")
+        .join(needed, ["conv_id", "span_id"], "left_semi")
         .localCheckpoint(eager=False)
     )
 
@@ -394,66 +362,48 @@ def _resolve_references(spans: DataFrame) -> DataFrame:
     # MAX_DEPTH full passes over all referenced spans (each a join +
     # barrier that cost fixed wall at any parallelism: the measured
     # ~2s/round serial tail of BENCH.md finding 9).  A usable ref is
-    # non-null, non-self, and present in the lookup — identical guards to
-    # the per-round form, so shorter chains degrade to identity hops.
-    def hop(values: DataFrame) -> DataFrame:
-        """values: (l_conv, l_sid, l_resolved) = L_{k-1} → L_k."""
-        tgt = values.select(
-            F.col("l_conv").alias("t_conv"),
-            F.col("l_sid").alias("t_sid"),
-            F.col("l_resolved").alias("t_resolved"),
+    # non-null, non-self, and present in the lookup — one guard for the
+    # hops and the final join, so shorter chains degrade to identity hops.
+    def attach(rows: DataFrame, lookup: DataFrame) -> DataFrame:
+        """rows (conv_id, span_id, answer_latex, ref_id, ...) and
+        L_{k-1} = lookup (conv_id, span_id, resolved) → rows + R_k as
+        ``resolved``."""
+        tgt = lookup.select(
+            F.col("conv_id").alias("t_conv"),
+            F.col("span_id").alias("t_sid"),
+            F.col("resolved").alias("t_resolved"),
         )
-        s = static_lookup.alias("s")
         return (
-            s.join(
-                tgt.alias("t"),
-                (F.col("s.l_conv") == F.col("t.t_conv"))
-                & (F.col("s.l_ref") == F.col("t.t_sid")),
+            rows.join(
+                tgt,
+                (F.col("conv_id") == F.col("t_conv"))
+                & (F.col("ref_id") == F.col("t_sid")),
                 "left",
             )
-            .select(
-                F.col("s.l_conv").alias("l_conv"),
-                F.col("s.l_sid").alias("l_sid"),
+            .withColumn(
+                "resolved",
                 F.when(
-                    F.col("s.l_ref").isNotNull()
-                    & (F.col("s.l_ref") != F.col("s.l_sid"))
-                    & F.col("t.t_resolved").isNotNull(),
+                    F.col("ref_id").isNotNull()
+                    & (F.col("ref_id") != F.col("span_id"))
+                    & F.col("t_resolved").isNotNull(),
                     F.concat(
-                        F.col("s.l_base"),
-                        F.lit(CONTEXT_OPEN), F.col("s.l_ref"),
-                        F.lit(CONTEXT_CLOSE), F.col("t.t_resolved"),
+                        F.col("answer_latex"),
+                        F.lit(CONTEXT_OPEN), F.col("ref_id"),
+                        F.lit(CONTEXT_CLOSE), F.col("t_resolved"),
                     ),
-                ).otherwise(F.col("s.l_base")).alias("l_resolved"),
+                ).otherwise(F.col("answer_latex")),
             )
+            .drop("t_conv", "t_sid", "t_resolved")
         )
 
     lookup = static_lookup.select(
-        "l_conv", "l_sid", F.col("l_base").alias("l_resolved")
+        "conv_id", "span_id", F.col("answer_latex").alias("resolved")
     )
     for _ in range(MAX_DEPTH - 1):
-        lookup = hop(lookup).localCheckpoint(eager=False)
-
-    with_ref = (
-        with_ref.join(
-            lookup,
-            (with_ref["conv_id"] == lookup["l_conv"])
-            & (with_ref["ref_id"] == lookup["l_sid"]),
-            "left",
-        )
-        .withColumn(
-            "resolved",
-            F.when(
-                (F.col("ref_id") != F.col("span_id"))
-                & F.col("l_resolved").isNotNull(),
-                F.concat(
-                    F.col("answer_latex"),
-                    F.lit(CONTEXT_OPEN), F.col("ref_id"),
-                    F.lit(CONTEXT_CLOSE), F.col("l_resolved"),
-                ),
-            ).otherwise(F.col("answer_latex")),
-        )
-        .drop("l_conv", "l_sid", "l_resolved")
-    )
+        lookup = attach(static_lookup, lookup) \
+            .select("conv_id", "span_id", "resolved") \
+            .localCheckpoint(eager=False)
+    with_ref = attach(with_ref, lookup)
 
     no_ref = spans.filter(F.col("ref_id").isNull()).withColumn(
         "resolved", F.col("answer_latex")
@@ -555,10 +505,4 @@ def run_extract(
 ) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → spans
     (OUTPUT_SCHEMA + sk_* ordering keys)."""
-    from pdf_extractor_spark.shipping import ensure_workers
-
-    ensure_workers(transcripts.sparkSession)
-    parsed = transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        parse_batches, PARSED_SCHEMA
-    )
-    return extract_from_parsed(parsed, block_size)
+    return extract_from_parsed(parse_transcripts(transcripts), block_size)

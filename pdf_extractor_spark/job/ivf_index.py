@@ -51,12 +51,10 @@ from pyspark.sql.types import StructType
 
 # the pointer-file and commit-lock disciplines are shared with the other
 # persisted stores — one protocol, one set of failure modes
-from pdf_extractor_spark.job.dedup_store import (
-    _commit_generation,
-    _generation,
-)
 from pdf_extractor_spark.job.upsert import (
     _acquire_lock,
+    _commit_pointer,
+    _read_pointer,
     _release_lock,
 )
 from pdf_extractor_spark.queries.base import load
@@ -71,20 +69,18 @@ from pdf_extractor_spark.queries.similarity import (
 
 
 def _gen_root(index_dir: str) -> str:
-    """Directory of the COMMITTED generation (legacy pre-generation
-    indexes keep their flat layout at the index root)."""
-    gen = _generation(index_dir)
+    """Directory of the COMMITTED generation."""
+    gen = _read_pointer(index_dir, "_GEN")
     if gen is None:
-        return index_dir
+        raise ValueError(
+            f"no built IVF index at {index_dir} (no _GEN pointer); "
+            "run build_index first"
+        )
     return os.path.join(index_dir, f"gen-{gen}")
 
 
 def _cells_dir(index_dir: str) -> str:
     return os.path.join(_gen_root(index_dir), "cells")
-
-
-def _centroids_dir(index_dir: str) -> str:
-    return os.path.join(_gen_root(index_dir), "centroids")
 
 
 def _cells_reader_at(spark: SparkSession, root: str):
@@ -113,7 +109,7 @@ def build_index(spark: SparkSession, sf_dir: str, index_dir: str) -> int:
     os.makedirs(index_dir, exist_ok=True)
     lock = _acquire_lock(index_dir)
     try:
-        old_gen = _generation(index_dir)
+        old_gen = _read_pointer(index_dir, "_GEN")
         new_gen = 0 if old_gen is None else old_gen + 1
         root = os.path.join(index_dir, f"gen-{new_gen}")
         if os.path.exists(root):            # crashed earlier attempt
@@ -151,20 +147,10 @@ def build_index(spark: SparkSession, sf_dir: str, index_dir: str) -> int:
             .write.mode("overwrite")
             .parquet(os.path.join(root, "centroids"))
         )
-        _commit_generation(index_dir, new_gen)          # COMMIT POINT
-        # sweep superseded layouts: older generations, plus the flat
-        # pre-generation layout a legacy index kept at the root
+        _commit_pointer(index_dir, new_gen, "_GEN")    # COMMIT POINT
         for d in os.listdir(index_dir):
-            full = os.path.join(index_dir, d)
             if d.startswith("gen-") and d != f"gen-{new_gen}":
-                shutil.rmtree(full, ignore_errors=True)
-            elif d in ("cells", "centroids"):
-                shutil.rmtree(full, ignore_errors=True)
-            elif d == "_CELLS_SCHEMA.json":
-                try:
-                    os.remove(full)
-                except OSError:
-                    pass
+                shutil.rmtree(os.path.join(index_dir, d), ignore_errors=True)
         return n
     finally:
         _release_lock(*lock)

@@ -55,19 +55,24 @@ class ConcurrentWriteError(RuntimeError):
     """Another writer holds the commit lock (or won the pointer race)."""
 
 
-def _latest_snapshot(table_dir: str) -> int | None:
-    path = os.path.join(table_dir, _LATEST)
+def _read_pointer(table_dir: str, name: str = _LATEST) -> int | None:
+    """The integer in pointer file ``name``, or None if it was never
+    committed.  Shared by every persisted store here (upsert ``_LATEST``,
+    dedup-store/IVF ``_GEN`` and ``_N_BUCKETS``)."""
+    path = os.path.join(table_dir, name)
     if not os.path.exists(path):
         return None
     with open(path) as f:
         return int(f.read().strip())
 
 
-def _commit_pointer(table_dir: str, snapshot: int) -> None:
-    fd, tmp = tempfile.mkstemp(prefix="_LATEST.", dir=table_dir)
+def _commit_pointer(table_dir: str, value: int, name: str = _LATEST) -> None:
+    """Atomically swap pointer file ``name`` to ``value`` (temp file +
+    ``os.replace``)."""
+    fd, tmp = tempfile.mkstemp(prefix=f"{name}.", dir=table_dir)
     with os.fdopen(fd, "w") as f:
-        f.write(f"{snapshot}\n")
-    os.replace(tmp, os.path.join(table_dir, _LATEST))
+        f.write(f"{value}\n")
+    os.replace(tmp, os.path.join(table_dir, name))
 
 
 def _acquire_lock(table_dir: str) -> tuple[str, str]:
@@ -135,7 +140,7 @@ def force_unlock(table_dir: str) -> None:
 
 def read_table(spark: SparkSession, table_dir: str) -> DataFrame | None:
     """Current committed snapshot, or None for an empty table."""
-    snap = _latest_snapshot(table_dir)
+    snap = _read_pointer(table_dir)
     if snap is None:
         return None
     return spark.read.parquet(os.path.join(table_dir, f"snapshot={snap}"))
@@ -164,7 +169,7 @@ def merge_upsert(
     # files to unique paths for the same reason
     staging = os.path.join(table_dir, f"_staging-{uuid.uuid4().hex}")
     try:
-        base = _latest_snapshot(table_dir)
+        base = _read_pointer(table_dir)
         current = read_table(spark, table_dir)
         if current is None:
             merged = updates
@@ -185,7 +190,7 @@ def merge_upsert(
         # CAS: the snapshot we merged against must still be current —
         # a writer that slipped past the lock (e.g. after force_unlock)
         # must not have its merge silently discarded
-        if _latest_snapshot(table_dir) != base:
+        if _read_pointer(table_dir) != base:
             raise ConcurrentWriteError(
                 f"pointer moved from snapshot {base} during commit; "
                 "retry the merge against the new snapshot"

@@ -8,9 +8,9 @@ reference's split between per-page extraction (pipeline.py:214-256) and
 document-level stitching (pipeline.py:259-309) — the page loop is the
 stream, the stitch is the snapshot job.
 
-- ``stream_parse``   — readStream(parquet transcripts) → mapInPandas
-  (Arrow batches, identical parse code as batch) → parquet sink with a
-  streaming checkpoint.  ``trigger(availableNow)`` drains whatever has
+- ``stream_parse``   — readStream(parquet transcripts) →
+  ``parse_transcripts`` (the batch job's own parse stage) → parquet sink
+  with a streaming checkpoint.  ``trigger(availableNow)`` drains whatever has
   arrived and stops — the idempotent micro-batch shape; exactly-once
   comes from the checkpoint + file-sink manifest.
 - ``stream_turn_metrics`` — watermarked tumbling-window counts per role:
@@ -23,13 +23,12 @@ parquet file source is the sandbox stand-in.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from pdf_extractor_spark.job.extract import PARSED_SCHEMA, parse_batches
+from pdf_extractor_spark.job.extract import parse_transcripts
 from pdf_extractor_spark.queries.extraction import TRANSCRIPTS_SCHEMA
-from pdf_extractor_spark.shipping import ensure_workers
 
 
 def stream_parse(
@@ -39,15 +38,12 @@ def stream_parse(
     checkpoint_dir: str,
 ) -> StreamingQuery:
     """Incrementally parse arriving transcript files into fragment rows."""
-    ensure_workers(spark)
     src = (
         spark.readStream.schema(TRANSCRIPTS_SCHEMA)
         .option("maxFilesPerTrigger", 64)
         .parquet(input_dir)
     )
-    parsed = src.select("conv_id", "turn_idx", "text").mapInPandas(
-        parse_batches, PARSED_SCHEMA
-    )
+    parsed = parse_transcripts(src)
     return (
         parsed.writeStream.format("parquet")
         .option("path", output_dir)
@@ -89,13 +85,4 @@ def stream_turn_metrics(
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def batch_parse(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
-    """The same parse stage in batch form — used to assert stream/batch
-    equivalence in tests."""
-    ensure_workers(spark)
-    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        parse_batches, PARSED_SCHEMA
     )

@@ -176,6 +176,33 @@ def test_bucket_count_is_a_persisted_creation_property(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {name}_bands")
 
 
+def test_open_store_refuses_dir_without_committed_store(spark, tmp_path):
+    """``_N_BUCKETS`` is the creation commit marker.  Without it there is
+    no store to open: neither a missing path (catalog tables over absent
+    dirs would call every doc new) nor a store whose create crashed
+    before the marker (guessing the default count would register 8-bucket
+    files as 16 buckets) may be registered."""
+    import os
+
+    name = "store_nomarker"
+    with pytest.raises(ValueError, match="no committed dedup store"):
+        open_store(spark, str(tmp_path / "missing"), name)
+    assert not spark.catalog.tableExists(f"{name}_fp")
+
+    sdir = str(tmp_path / "store8")
+    try:
+        create_store(sdir, name, _corpus(spark), n_buckets=8)
+        spark.sql(f"DROP TABLE {name}_fp")
+        spark.sql(f"DROP TABLE {name}_bands")
+        os.remove(os.path.join(sdir, "_N_BUCKETS"))
+        with pytest.raises(ValueError, match="no committed dedup store"):
+            open_store(spark, sdir, name)
+        assert not spark.catalog.tableExists(f"{name}_fp")
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}_fp")
+        spark.sql(f"DROP TABLE IF EXISTS {name}_bands")
+
+
 def test_open_store_rejects_path_mismatch(spark, store, tmp_path):
     """CREATE TABLE IF NOT EXISTS keeps a previously-registered table:
     opening a DIFFERENT store dir under the same name would silently
@@ -341,16 +368,14 @@ def test_open_store_heals_intra_store_stale_pointer(spark, store, tmp_path):
     import os
     import shutil as sh
 
-    from pdf_extractor_spark.job.dedup_store import (
-        _commit_generation,
-        _table_location,
-    )
+    from pdf_extractor_spark.job.dedup_store import _table_location
+    from pdf_extractor_spark.job.upsert import _commit_pointer
 
     sdir = str(tmp_path / "store")
     sh.copytree(os.path.join(sdir, "fp-g0"), os.path.join(sdir, "fp-g1"))
     sh.copytree(os.path.join(sdir, "bands-g0"),
                 os.path.join(sdir, "bands-g1"))
-    _commit_generation(sdir, 1)
+    _commit_pointer(sdir, 1, "_GEN")
     open_store(spark, sdir, store)   # heals the stale catalog pointer
     assert _table_location(spark, f"{store}_fp").endswith("fp-g1")
     got = check_batch(spark, store, _batch(spark))

@@ -192,6 +192,15 @@ def test_add_vectors_on_empty_index_fails_clearly(spark, tmp_path):
         add_vectors(spark, idx, vecs)
 
 
+def test_search_on_unbuilt_index_fails_clearly(spark, tmp_path):
+    """No committed _GEN pointer means no index: refuse with the contract
+    error instead of reading a guessed layout."""
+    import pytest
+
+    with pytest.raises(ValueError, match="no built IVF index"):
+        search(spark, str(tmp_path / "never-built"), _queries_df(spark))
+
+
 def test_search_pins_one_generation(spark, tmp_path, monkeypatch):
     """search() must resolve the committed _GEN pointer exactly ONCE and
     read centroids, schema, and cells from that pinned root — resolving

@@ -14,7 +14,7 @@ import pytest
 
 from pdf_extractor_spark.core.oracle import OUTPUT_COLUMNS, extract_table
 from pdf_extractor_spark.gen import generate_transcripts
-from pdf_extractor_spark.job.extract import run_extract
+from pdf_extractor_spark.job.extract import DEFAULT_BLOCK_SIZE, run_extract
 
 KEY = ["conv_id", "turn_idx", "span_id"]
 
@@ -118,3 +118,31 @@ def test_null_and_empty_text_rows_are_tolerated(spark):
         spark.createDataFrame(dirty, schema=TRANSCRIPTS_SCHEMA)
     ).toPandas()
     _assert_equal(out, oracle)
+
+
+@pytest.mark.parametrize("block_size", [3, DEFAULT_BLOCK_SIZE])
+def test_layered_stages_equal_run_extract(spark, corpus, block_size):
+    """The stage interface a per-layer traced run drives
+    (perfbench/worker.py:run_trace): parse → level-1 stitch → edge merge
+    → resolve → finalize → sort keys, each stage materialized before the
+    next, must produce exactly run_extract's rows."""
+    from pdf_extractor_spark.job import extract as X
+    from pdf_extractor_spark.shipping import ensure_workers
+
+    tdf, _ = corpus
+    transcripts = spark.createDataFrame(tdf)
+    ensure_workers(spark)
+    parsed = transcripts.select("conv_id", "turn_idx", "text") \
+        .mapInPandas(X.parse_batches, X.PARSED_SCHEMA) \
+        .localCheckpoint(eager=True)
+    stitched = X._link_and_stitch_blocks(parsed, block_size) \
+        .localCheckpoint(eager=True)
+    merged = X._merge_block_edges(stitched, block_size) \
+        .localCheckpoint(eager=True)
+    resolved = X._resolve_references(merged).localCheckpoint(eager=True)
+    layered = X.sort_key_columns(X._finalize(resolved))
+
+    expected = run_extract(transcripts, block_size=block_size)
+    assert layered.columns == expected.columns
+    assert sorted(layered.collect(), key=repr) \
+        == sorted(expected.collect(), key=repr)

@@ -3,9 +3,9 @@
 
 from __future__ import annotations
 
+from pdf_extractor_spark.job.extract import parse_transcripts
 from pdf_extractor_spark.queries.extraction import transcripts_df
 from pdf_extractor_spark.streaming.ingest import (
-    batch_parse,
     stream_parse,
     stream_turn_metrics,
 )
@@ -29,14 +29,14 @@ def test_stream_parse_matches_batch_and_is_exactly_once(spark, tmp_path):
     q = stream_parse(spark, src, out, ckpt)
     q.awaitTermination(120)
     n1 = spark.read.parquet(out).count()
-    assert n1 == batch_parse(spark, first).count()
+    assert n1 == parse_transcripts(first).count()
 
     # chunk 2 arrives → drain processes ONLY the new files
     second.write.mode("append").parquet(src)
     q = stream_parse(spark, src, out, ckpt)
     q.awaitTermination(120)
     got = spark.read.parquet(out)
-    assert _sorted_rows(got) == _sorted_rows(batch_parse(spark, all_df))
+    assert _sorted_rows(got) == _sorted_rows(parse_transcripts(all_df))
 
     # nothing new → no duplicate reprocessing
     q = stream_parse(spark, src, out, ckpt)

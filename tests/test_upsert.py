@@ -11,7 +11,7 @@ import pytest
 
 from pdf_extractor_spark.job.upsert import (
     ConcurrentWriteError,
-    _latest_snapshot,
+    _read_pointer,
     force_unlock,
     latest_reviews_view,
     merge_upsert,
@@ -65,7 +65,7 @@ def test_merge_upsert_crash_leaves_previous_snapshot(spark, table_dir):
         .write.parquet(orphan)
 
     # readers still resolve the committed pointer, not the orphan
-    assert _latest_snapshot(table_dir) == 0
+    assert _read_pointer(table_dir) == 0
     assert _rows(read_table(spark, table_dir)) == before
 
 
@@ -115,7 +115,7 @@ def test_cas_loser_does_not_clobber_committed_snapshot(
     base = spark.createDataFrame([("a", "accepted", 1)], SCHEMA)
     merge_upsert(spark, table_dir, base, ["qa_id"])  # snapshot 0
 
-    real = up._latest_snapshot
+    real = up._read_pointer
     calls = {"n": 0}
 
     def racy(td):
@@ -128,14 +128,14 @@ def test_cas_loser_does_not_clobber_committed_snapshot(
             up._commit_pointer(td, 1)
         return real(td)
 
-    monkeypatch.setattr(up, "_latest_snapshot", racy)
+    monkeypatch.setattr(up, "_read_pointer", racy)
     updates = spark.createDataFrame([("a", "by-A", 3)], SCHEMA)
     with pytest.raises(ConcurrentWriteError, match="pointer moved"):
         merge_upsert(spark, table_dir, updates, ["qa_id"])
-    monkeypatch.setattr(up, "_latest_snapshot", real)
+    monkeypatch.setattr(up, "_read_pointer", real)
 
     # B's committed snapshot survives A's losing attempt verbatim
-    assert _latest_snapshot(table_dir) == 1
+    assert _read_pointer(table_dir) == 1
     assert ("b", "by-B", 2) in _rows(read_table(spark, table_dir))
     assert ("a", "by-A", 3) not in _rows(read_table(spark, table_dir))
     # no staging garbage, and the lock was released despite the raise
