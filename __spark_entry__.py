@@ -32,4 +32,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return dict(_q.ORACLE_SQL)
+    return _q.oracle_sql()

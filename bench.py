@@ -9,11 +9,12 @@ at N and 4N cores (default 2 vs 8; see BENCH.md for why this pair is the
 faithful independent-executor analog on this VM) over a ~2.8M-turn corpus
 to evidence the N→4N scaling-efficiency criterion (BASELINE.md).
 
-Prints a full JSON record as a preliminary line:
+Prints a full JSON record as a preliminary line before the scaling phase:
   {"metric": ..., "value": ..., "unit": "sec", "queries": {...}, "sf": ...,
    "extraction": {...}, "scaling": {...}}
-and ends (also when SIGTERMed) with the compact ``summary`` of it — the
-last stdout line is the record, and it stays under 1 KB.
+and ends (also when SIGTERMed) with the full record, scaling pairs
+included, followed by its compact ``summary`` — the last stdout line,
+which stays under 1 KB.
 """
 
 from __future__ import annotations
@@ -88,6 +89,18 @@ MD5_BAND = 1.10   # md5 readings are tight (±4% quiet)
 BW_BAND = 1.30    # bw readings swing ±10% quiet; 1.9× under real load
 
 
+def _median_wall(body: str, n_procs: int) -> float:
+    """Run ``body`` (a script printing its own timed wall) in ``n_procs``
+    concurrent processes; returns the MEDIAN wall in seconds."""
+    procs = [
+        subprocess.Popen([sys.executable, "-c", body],
+                         stdout=subprocess.PIPE, text=True)
+        for _ in range(n_procs)
+    ]
+    walls = sorted(float(p.communicate()[0].strip()) for p in procs)
+    return round(walls[n_procs // 2], 3)
+
+
 def md5_control(n_procs: int = 8, mib_per_proc: int = 256) -> float:
     """Pure-CPU ambient-load control: N processes each md5 a fixed
     buffer; returns the MEDIAN per-proc wall in seconds.  Identical work
@@ -96,21 +109,15 @@ def md5_control(n_procs: int = 8, mib_per_proc: int = 256) -> float:
     pinned in BENCH.md; a run whose control is >10% over reference is a
     loaded window and its absolute walls are not comparable across
     rounds (the r2→r3 flagship 'regression' was exactly this)."""
-    body = (
+    return _median_wall(
         "import hashlib,time,sys\n"
         "buf = b'x' * (1<<20)\n"
         "t0 = time.time()\n"
         f"h = hashlib.md5()\n"
         f"for _ in range({mib_per_proc}): h.update(buf)\n"
-        "print(time.time() - t0)\n"
+        "print(time.time() - t0)\n",
+        n_procs,
     )
-    procs = [
-        subprocess.Popen([sys.executable, "-c", body],
-                         stdout=subprocess.PIPE, text=True)
-        for _ in range(n_procs)
-    ]
-    walls = sorted(float(p.communicate()[0].strip()) for p in procs)
-    return round(walls[n_procs // 2], 3)
 
 
 def bw_control(n_procs: int = 8, mib_per_proc: int = 512,
@@ -121,21 +128,15 @@ def bw_control(n_procs: int = 8, mib_per_proc: int = 512,
     aggregate memory traffic in ~0.26 s quiet, so hypervisor/bandwidth
     contention — the failure mode the md5 CPU probe cannot see — shows
     up directly (measured 1.9× under a 24-proc streaming load)."""
-    body = (
+    return _median_wall(
         "import numpy as np, time\n"
         f"a = np.ones({mib_per_proc} * (1 << 20) // 8, dtype=np.float64)\n"
         "t0 = time.time()\n"
         "s = 0.0\n"
         f"for _ in range({passes}): s += float(a.sum())\n"
-        "print(time.time() - t0)\n"
+        "print(time.time() - t0)\n",
+        n_procs,
     )
-    procs = [
-        subprocess.Popen([sys.executable, "-c", body],
-                         stdout=subprocess.PIPE, text=True)
-        for _ in range(n_procs)
-    ]
-    walls = sorted(float(p.communicate()[0].strip()) for p in procs)
-    return round(walls[n_procs // 2], 3)
 
 
 def ambient_controls() -> dict:
@@ -178,9 +179,37 @@ def summary(payload: dict) -> dict:
     return out
 
 
+def emit_final(payload: dict) -> None:
+    """The closing two stdout lines: the full record (per-query walls,
+    per-pair tps, controls and ``accepted`` flags), then its compact
+    ``summary`` as the last line."""
+    print(json.dumps(payload), flush=True)
+    print(json.dumps(summary(payload)), flush=True)
+
+
+def _corpus(spark, prefix: str, n_convs: int, skew_turns: int,
+            partitions: int) -> str:
+    """The synthetic transcripts corpus dir under the temp dir, generated
+    once (reused while its ``_SUCCESS`` marker exists)."""
+    path = os.path.join(tempfile.gettempdir(),
+                        f"{prefix}_{n_convs}_{skew_turns}")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        from pdf_extractor_spark.gen.distributed import generate_corpus_df
+
+        (
+            generate_corpus_df(
+                spark, n_convs, seed=42,
+                skew_conv_turns=skew_turns, partitions=partitions,
+            )
+            .write.mode("overwrite")
+            .parquet(path)
+        )
+    return path
+
+
 def main() -> None:
     from pdf_extractor_spark.job.session import get_spark
-    from pdf_extractor_spark.queries import QUERIES
+    from pdf_extractor_spark.queries import get
 
     spark = get_spark(app_name="bench", cores=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
@@ -188,59 +217,25 @@ def main() -> None:
     sf = float(os.path.basename(SF_DIR.rstrip("/")).replace("sf", "") or 0.1)
     timings: dict[str, float] = {}
 
-    # the registry entries for the sf0.01-pinned-oracle queries ignore
-    # sf_dir by design (they self-pin to their oracle input); the bench
-    # must keep measuring the REAL $SPARK_GRAFT_SF_DIR, so it drives the
-    # sf-honoring impls directly for those names
-    from pdf_extractor_spark.queries.similarity import (
-        _ann_ivf,
-        _dedup_embedding_cosine,
-        _dedup_semantic,
-    )
-    from pdf_extractor_spark.queries.textops import (
-        _bpe_encode,
-        _pack_sequences,
-    )
-
-    impl_overrides = {
-        "ann_ivf": _ann_ivf,
-        "dedup_embedding_cosine": _dedup_embedding_cosine,
-        "dedup_semantic": _dedup_semantic,
-        "bpe_encode": _bpe_encode,
-        "pack_sequences": _pack_sequences,
-    }
-
-    # untimed session warm-up (codegen, scan readers, broadcast machinery):
-    # steady-state per-query walls, not first-query JVM init
-    QUERIES[HEADLINE[0]](spark, SF_DIR).write.mode("overwrite") \
+    # Q.fn honours sf_dir for every query (the registry's Q.run would
+    # read an sf0.01 pin instead): the bench measures the REAL
+    # $SPARK_GRAFT_SF_DIR.  Untimed session warm-up first (codegen, scan
+    # readers, broadcast machinery): steady-state per-query walls, not
+    # first-query JVM init
+    get(HEADLINE[0]).fn(spark, SF_DIR).write.mode("overwrite") \
         .format("noop").save()
 
     for name in HEADLINE:
-        fn = impl_overrides.get(name) or QUERIES[name]
         t0 = time.time()
-        df = fn(spark, SF_DIR)
+        df = get(name).fn(spark, SF_DIR)
         # force full materialization of every column (count() would let
         # Catalyst prune the computed columns away)
         df.write.mode("overwrite").format("noop").save()
         timings[name] = round(time.time() - t0, 3)
 
     # ---- flagship extraction throughput on the bench corpus ------------
-    corpus_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"bench_corpus_{BENCH_CONVS}_{BENCH_SKEW_TURNS}",
-    )
-    marker = os.path.join(corpus_dir, "_SUCCESS")
-    if not os.path.exists(marker):
-        from pdf_extractor_spark.gen.distributed import generate_corpus_df
-
-        (
-            generate_corpus_df(
-                spark, BENCH_CONVS, seed=42,
-                skew_conv_turns=BENCH_SKEW_TURNS, partitions=64,
-            )
-            .write.mode("overwrite")
-            .parquet(corpus_dir)
-        )
+    corpus_dir = _corpus(spark, "bench_corpus", BENCH_CONVS,
+                         BENCH_SKEW_TURNS, partitions=64)
 
     from pdf_extractor_spark.job.extract import run_extract
 
@@ -316,10 +311,8 @@ def main() -> None:
 
     _current_worker: dict = {}
 
-    def emit(record: dict) -> None:
-        print(json.dumps(record), flush=True)
-
-    emit(payload)  # full preliminary line — the summary below supersedes it
+    # full preliminary line: the scaling phase may be SIGTERMed
+    print(json.dumps(payload), flush=True)
 
     import signal
 
@@ -328,7 +321,7 @@ def main() -> None:
         proc = _current_worker.get("proc")
         if proc is not None and proc.poll() is None:
             proc.kill()
-        emit(summary(payload))
+        emit_final(payload)
         os._exit(0)
 
     signal.signal(signal.SIGTERM, _on_term)
@@ -351,21 +344,8 @@ def main() -> None:
     # 2-core regime) still costs only ~1,100 s, so TWO pairs always fit.
     SCALE_CONVS = int(os.environ.get("SPARK_GRAFT_SCALE_CONVS", "320000"))
     SCALE_SKEW = int(os.environ.get("SPARK_GRAFT_SCALE_SKEW", "20000"))
-    scale_corpus = os.path.join(
-        tempfile.gettempdir(),
-        f"scale_corpus_{SCALE_CONVS}_{SCALE_SKEW}",
-    )
-    if not os.path.exists(os.path.join(scale_corpus, "_SUCCESS")):
-        from pdf_extractor_spark.gen.distributed import generate_corpus_df
-
-        (
-            generate_corpus_df(
-                spark, SCALE_CONVS, seed=42,
-                skew_conv_turns=SCALE_SKEW, partitions=128,
-            )
-            .write.mode("overwrite")
-            .parquet(scale_corpus)
-        )
+    scale_corpus = _corpus(spark, "scale_corpus", SCALE_CONVS, SCALE_SKEW,
+                           partitions=128)
     spark.stop()
 
     # ---- N vs 4N scaling (fresh JVM per level, CPU-pinned like a
@@ -552,7 +532,7 @@ def main() -> None:
         if not pairs:
             payload["scaling"] = {"error": results}
 
-    emit(summary(payload))
+    emit_final(payload)
 
 
 if __name__ == "__main__":

@@ -16,11 +16,11 @@ Layout:
   repartition → ``mapInPandas`` parse → window linking → native stitch →
   broadcast reference resolution → transactional sink with resumable
   watermark.
-- :mod:`pdf_extractor_spark.ops` — operator library (relational operators
-  from SURVEY.md §2 plus training-data-pipeline operators: dedup families,
-  similarity search, text analysis, multimodal plumbing).  Each operator is
-  defined once as a *shared spec* compiled to both a PySpark plan and an
-  ANSI-SQL (DuckDB) oracle string.
+- :mod:`pdf_extractor_spark.queries` — operator library (relational
+  operators from SURVEY.md §2 plus training-data-pipeline operators: dedup
+  families, similarity search, text analysis, multimodal plumbing).  Each
+  operator is defined once as a *shared spec* compiled to both a PySpark
+  plan and an ANSI-SQL (DuckDB) oracle string.
 """
 
 __version__ = "0.1.0"

@@ -86,13 +86,6 @@ def _dot(a: list[float], b: list[float]) -> float:
     return acc
 
 
-def _cosine(a: list[float], b: list[float]) -> float:
-    # math.sqrt, NOT **0.5: IEEE sqrt is correctly rounded by contract,
-    # pow(x, 0.5) is not — the cross-implementation bit-equality spec
-    # requires both sides to use sqrt.
-    return _dot(a, b) / (math.sqrt(_dot(a, a)) * math.sqrt(_dot(b, b)))
-
-
 def select_sample(ids_vecs: list[tuple[int, list[float]]],
                   n_sample: int = N_FIT_SAMPLE
                   ) -> list[tuple[int, list[float]]]:
@@ -114,7 +107,9 @@ def fit(sample_hash_ordered: list[tuple[int, list[float]]],
     members_order = sorted(sample_hash_ordered, key=lambda t: t[0])
     # norms are loop-invariant (members never change; centroids change
     # once per iteration) — caching them changes no op's inputs, so the
-    # result stays bit-identical to the naive mirror (test_kmeans.py)
+    # result stays bit-identical to the naive mirror (test_kmeans.py).
+    # math.sqrt, NOT **0.5: IEEE sqrt is correctly rounded by contract,
+    # pow(x, 0.5) is not — the bit-equality spec needs sqrt on both sides
     member_norms = [
         math.sqrt(_dot(vec, vec)) for _, vec in members_order
     ]

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.core.bpe import load_merges
-from pdf_extractor_spark.job.dedup_store import add_batch, check_batch
+from pdf_extractor_spark.job.dedup_store import add_batch, dedup_flags
 from pdf_extractor_spark.queries.textops import (
     CURATE_MIN_QUALITY,
     bpe_token_udf,
@@ -89,22 +89,11 @@ def curate(
         (F.col("quality_score") >= min_quality)
         & (F.col("pred_lang") == lang)
     )
-    flagged = check_batch(spark, store_name,
-                          survivors.select("doc_id", "text"))
-    exact = flagged["exact"].select(
-        "doc_id", F.lit("exact_dup").alias("dedup_reason"),
-        F.col("dup_of").alias("matched"),
-    )
-    near = (
-        flagged["near"].groupBy("doc_id")
-        .agg(F.min("near_of").alias("matched"))
-        .select("doc_id", F.lit("near_dup").alias("dedup_reason"),
-                "matched")
-    )
-    dedup_flags = exact.unionByName(near)
+    dedup = dedup_flags(spark, store_name,
+                        survivors.select("doc_id", "text"))
 
     decisions = (
-        gated.join(dedup_flags, "doc_id", "left")
+        gated.join(dedup, "doc_id", "left")
         .select(
             "doc_id",
             "quality_score",
@@ -112,8 +101,7 @@ def curate(
             "bpe_tokens",
             F.when(F.col("quality_score") < min_quality, "low_quality")
             .when(F.col("pred_lang") != lang, "wrong_lang")
-            .when(F.col("dedup_reason").isNotNull(),
-                  F.col("dedup_reason"))
+            .when(F.col("verdict").isNotNull(), F.col("verdict"))
             .otherwise("accepted")
             .alias("reason"),
             "matched",

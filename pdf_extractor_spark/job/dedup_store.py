@@ -389,6 +389,27 @@ def check_batch(spark: SparkSession, name: str,
     return {"exact": exact, "near": near}
 
 
+def dedup_flags(spark: SparkSession, name: str,
+                batch: DataFrame) -> DataFrame:
+    """``check_batch`` as one verdict per flagged doc: (doc_id, verdict,
+    matched) with verdict ``exact_dup`` (matched = ``dup_of``) or
+    ``near_dup`` (matched = the smallest ``near_of``).  Docs that are
+    neither have no row."""
+    got = check_batch(spark, name, batch)
+    exact = got["exact"].select(
+        "doc_id",
+        F.lit("exact_dup").alias("verdict"),
+        F.col("dup_of").alias("matched"),
+    )
+    near = (
+        got["near"]
+        .groupBy("doc_id")
+        .agg(F.min("near_of").alias("matched"))
+        .select("doc_id", F.lit("near_dup").alias("verdict"), "matched")
+    )
+    return exact.unionByName(near)
+
+
 def add_batch(spark: SparkSession, name: str, batch: DataFrame) -> None:
     """Ingest a batch: append its fingerprints, and band rows for docs
     whose text is NEW to the store (reps of unseen fingerprints).

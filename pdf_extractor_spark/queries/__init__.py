@@ -1,13 +1,13 @@
 """Query/oracle registry — the driver-facing coverage surface.
 
-``QUERIES`` maps name → callable(spark, sf_dir) → DataFrame;
-``ORACLE_SQL`` maps the SQL-expressible subset to DuckDB oracle strings.
+``QUERIES`` maps name → callable(spark, sf_dir) → DataFrame (``Q.run``,
+which applies the query's sf pin); ``oracle_sql()`` maps the
+SQL-expressible subset to DuckDB oracle strings.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping
-from typing import Callable, Dict, Optional
+from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -72,47 +72,18 @@ _names = [q.name for q in ALL]
 assert len(_names) == len(set(_names)), "duplicate query names"
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    q.name: q.fn for q in ALL
+    q.name: q.run for q in ALL
 }
 
 
-class _LazyOracleSQL(Mapping):
-    """name → oracle SQL, resolving deferred constructors on ACCESS.
-
-    Some oracle strings are expensive to build (dedup_embedding_cosine
-    embeds centroid literals from the mirror k-means fit); executor
-    Python workers import this package for UDF closures, so that work
-    must not run at import time.  ``dict(ORACLE_SQL)`` (the driver's
-    ``oracle_sql()`` contract) materializes everything exactly when the
-    oracle surface is actually requested."""
-
-    def __init__(self, qs) -> None:
-        self._qs = {q.name: q for q in qs if q.sql is not None}
-
-    def __getitem__(self, name: str) -> str:
-        return self._qs[name].sql_text
-
-    def __iter__(self):
-        return iter(self._qs)
-
-    def __len__(self) -> int:
-        return len(self._qs)
-
-    # Mapping's default __contains__/.get delegate to __getitem__, which
-    # would build the full oracle SQL (the mirror k-means fit included)
-    # for a mere membership probe — the exact work this class defers.
-    def __contains__(self, name: object) -> bool:
-        return name in self._qs
-
-    def get(self, name, default=None):
-        return self._qs[name].sql_text if name in self._qs else default
-
-
-ORACLE_SQL: Mapping = _LazyOracleSQL(ALL)
+def oracle_sql() -> Dict[str, str]:
+    """name → DuckDB oracle SQL for the SQL-expressible subset.  Built on
+    call, not at import: some strings are expensive (the
+    dedup_embedding_cosine centroid literals need the mirror k-means
+    fit), and executor Python workers import this package for UDF
+    closures."""
+    return {q.name: q.sql_text for q in ALL if q.sql is not None}
 
 
 def get(name: str) -> Q:
-    for q in ALL:
-        if q.name == name:
-            return q
-    raise KeyError(name)
+    return _by_name[name]

@@ -4,6 +4,7 @@ Each query is registered as a ``Q`` with a Spark callable
 ``fn(spark, sf_dir) -> DataFrame`` and (when SQL-expressible) a DuckDB
 oracle SQL string over the driver's pre-registered views (``region nation
 customer supplier part orders lineitem events documents embeddings``).
+``Q.run`` is the registry entry: ``fn`` with the query's sf pin applied.
 
 Conventions that make the driver's order-insensitive value-hash stable:
 
@@ -42,11 +43,17 @@ class Q:
     # closures and must not pay oracle-side work there.
     sql: Union[str, Callable[[], str], None]
     doc: str = ""
-    # Pin the rehearsal's sf_dir for queries whose oracle is a checked-in
-    # expected parquet generated at a specific scale (the driver always
-    # compares at sf0.01; a pinned query must run against the same input
-    # there too).  None → use whatever sf the harness chose.
+    # The input dir a query's oracle was generated from (a checked-in
+    # expected parquet, or SQL embedding mirror-fit literals): ``run``
+    # reads the pin instead of the harness dir, so both sides of the
+    # compare see the same dataset.  None → whatever sf the harness chose.
     sf_pin: Optional[str] = None
+
+    def run(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        """The registry entry: ``fn`` at the pin if set, else at ``sf_dir``.
+        ``fn`` itself always honours ``sf_dir`` (bench and jobs measure
+        real scale dirs through it)."""
+        return self.fn(spark, self.sf_pin or sf_dir)
 
     @property
     def sql_text(self) -> Optional[str]:

@@ -29,11 +29,12 @@
 Oracle input pin: ann_ivf's expected parquet and the centroid literals
 inside the dedup_embedding_cosine oracle SQL are generated from
 /root/testdata/sf0.01/embeddings.parquet — the driver's sf0.01 compare
-input must be that same dataset (it is; TESTDATA.md).  BOTH queries
-carry ``Q.sf_pin``: tests/test_oracle_parity.py runs a pinned query's
-Spark side at the pin AND registers the oracle's DuckDB views from the
-pin, so the rehearsal never pairs an sf0.001 corpus with an sf0.01
-quantizer.
+input must be that same dataset (it is; TESTDATA.md).  Every query whose
+oracle comes from that fit carries ``Q.sf_pin``: ``Q.run`` (the registry
+entry) reads the pin whatever sf the harness passes, while ``Q.fn``
+honours its ``sf_dir`` for bench and job use.  tests/test_oracle_parity.py
+also registers a pinned query's DuckDB views from the pin, so the
+rehearsal never pairs an sf0.001 corpus with an sf0.01 quantizer.
 """
 
 from __future__ import annotations
@@ -912,44 +913,30 @@ FROM members
 """
 
 
-def _self_pinned(fn):
-    """Registry wrapper for queries whose oracle content is generated
-    from the PINNED sf0.01 input (mirror-fit centroid literals, expected
-    parquet): the query reads the pin ITSELF instead of trusting the
-    harness dir to hold that exact dataset — at any other sf the two
-    sides would block on different quantizers and agree only by
-    coincidence, and a content drift of the harness's sf0.01 dir would
-    turn the gate red confusingly (round-3 ADVICE).  The sf-honoring
-    impls (``_ann_ivf`` etc.) stay importable for bench.py and the
-    index/job layer, which measure real scale dirs."""
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return fn(spark, _PINNED_SF)
-    return wrapped
-
-
 QUERIES: list[Q] = [
-    # sf_pin: the oracle SQL embeds centroid literals from the mirror fit
-    # on the PINNED sf0.01 input, so the Spark side reads the pin itself
-    # (_self_pinned); Q.sf_pin additionally tells the rehearsal to
-    # register the oracle's DuckDB views from the pin.
-    Q("dedup_embedding_cosine", _self_pinned(_dedup_embedding_cosine),
+    # sf_pin: the oracle content (centroid literals in the SQL, expected
+    # parquet) is generated from the pinned sf0.01 input, so Q.run reads
+    # the pin — at any other sf the two sides would block on different
+    # quantizers and agree only by coincidence.  The rehearsal also
+    # registers the oracle's DuckDB views from the pin.
+    Q("dedup_embedding_cosine", _dedup_embedding_cosine,
       _dedup_cosine_sql,
       "embedding-cosine near-dup pairs, blocked by fitted IVF "
       "coarse-quantizer cell (pinned sf0.01 quantizer oracle)",
       sf_pin=_PINNED_SF),
-    Q("dedup_semantic", _self_pinned(_dedup_semantic), _dedup_semantic_sql,
+    Q("dedup_semantic", _dedup_semantic, _dedup_semantic_sql,
       "SemDeDup-style survivor selection: connected components over "
       "cell-blocked cosine near-dup pairs, keep the member farthest "
       "from its assigned centroid (pinned sf0.01 quantizer oracle)",
       sf_pin=_PINNED_SF),
     Q("cosine_topk", _cosine_topk, _COSINE_SQL,
       "brute-force cosine top-k (exact baseline)"),
-    Q("ann_ivf", _self_pinned(_ann_ivf),
+    Q("ann_ivf", _ann_ivf,
       "SELECT * FROM read_parquet('/root/repo/expected/ann_ivf.parquet')",
       "IVF ANN with fitted sampled-k-means quantizer (scale path); oracle "
       "is a checked-in independent sequential mirror at the pinned sf0.01",
       sf_pin=_PINNED_SF),
-    Q("ann_ivf_scaled", _self_pinned(_ann_ivf_scaled),
+    Q("ann_ivf_scaled", _ann_ivf_scaled,
       "SELECT * FROM read_parquet("
       "'/root/repo/expected/ann_ivf_scaled.parquet')",
       "IVF ANN with the quantizer K ABOVE the floor (K=20 from a "
@@ -957,14 +944,14 @@ QUERIES: list[Q] = [
       "fit path through the driver hash gate; oracle is the independent "
       "mirror expansion+fit+search at the pinned sf0.01",
       sf_pin=_PINNED_SF),
-    Q("ann_ivf_pq", _self_pinned(_ann_ivf_pq),
+    Q("ann_ivf_pq", _ann_ivf_pq,
       "SELECT * FROM read_parquet('/root/repo/expected/ann_ivf_pq.parquet')",
       "IVF-PQ compressed ANN (FAISS IVF,PQ8 shape): 8 one-byte codes per "
       "vector (32× smaller index), ADC lookup scoring inside probed "
       "cells; oracle is the independent mirror fit+encode+search at the "
       "pinned sf0.01",
       sf_pin=_PINNED_SF),
-    Q("ann_ivf_pq_rerank", _self_pinned(_ann_ivf_pq_rerank),
+    Q("ann_ivf_pq_rerank", _ann_ivf_pq_rerank,
       "SELECT * FROM read_parquet("
       "'/root/repo/expected/ann_ivf_pq_rerank.parquet')",
       "two-stage IVF-PQ search (FAISS refine pattern): ADC shortlist of "

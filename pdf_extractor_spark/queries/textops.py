@@ -1350,13 +1350,10 @@ QUERIES: list[Q] = [
       "pass — no global sort, no ntile window"),
     Q("token_count", _token_count, _TOKEN_COUNT_SQL,
       "whitespace + BPE-ish regex token counting"),
-    # sf_pin + self-pinned input: the oracle is expected parquet
-    # serialized by the mirror encoder over the PINNED sf0.01 documents,
-    # so the query reads that pin itself (the ann_ivf/_EXPECTED
-    # discipline); _bpe_encode stays importable for bench/jobs, which
-    # honor real sf dirs.
-    Q("bpe_encode",
-      lambda spark, _sf: _bpe_encode(spark, _BPE_PINNED_SF),
+    # sf_pin: the oracle is expected parquet serialized by the mirror
+    # encoder over the pinned sf0.01 documents, so Q.run reads the pin
+    # (the ann_ivf discipline)
+    Q("bpe_encode", _bpe_encode,
       "SELECT * FROM read_parquet('/root/repo/expected/bpe_encode"
       ".parquet')",
       "learned-merges BPE encode (checked-in 512-merge table, "
@@ -1377,12 +1374,8 @@ QUERIES: list[Q] = [
       "weighted source-mixture sampling: per-source rates, md5-keyed "
       "deterministic selection, single narrow pass"),
     # sf_pin: the oracle's per-doc token counts are the mirror encoder's
-    # checked-in sf0.01 parquet (the bpe_encode discipline), so the
-    # query reads that pin itself; _pack_sequences stays importable for
-    # bench/jobs, which honor real sf dirs.
-    Q("pack_sequences",
-      lambda spark, _sf: _pack_sequences(spark, _BPE_PINNED_SF),
-      _PACK_SQL,
+    # checked-in sf0.01 parquet (the bpe_encode discipline)
+    Q("pack_sequences", _pack_sequences, _PACK_SQL,
       "token-budget sequence packing: cumulative learned-merges BPE "
       "token windows per (source, md5-block) shard; oracle joins the "
       "mirror encoder's counts and restates the window in DuckDB",

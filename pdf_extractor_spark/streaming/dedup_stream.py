@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from pdf_extractor_spark.job.dedup_store import add_batch, check_batch
+from pdf_extractor_spark.job.dedup_store import add_batch, dedup_flags
 
 DOCS_SCHEMA = "doc_id bigint, text string"
 
@@ -48,19 +48,7 @@ DOCS_SCHEMA = "doc_id bigint, text string"
 def _decide(spark: SparkSession, store_name: str,
             batch: DataFrame) -> DataFrame:
     """(doc_id, verdict, matched) for every doc in ``batch``."""
-    got = check_batch(spark, store_name, batch)
-    exact = got["exact"].select(
-        "doc_id",
-        F.lit("exact_dup").alias("verdict"),
-        F.col("dup_of").alias("matched"),
-    )
-    near = (
-        got["near"]
-        .groupBy("doc_id")
-        .agg(F.min("near_of").alias("matched"))
-        .select("doc_id", F.lit("near_dup").alias("verdict"), "matched")
-    )
-    flagged = exact.unionByName(near)
+    flagged = dedup_flags(spark, store_name, batch)
     clean = (
         batch.select(F.col("doc_id").cast("bigint").alias("doc_id"))
         .join(flagged.select("doc_id"), "doc_id", "anti")

@@ -1,11 +1,15 @@
-"""bench.py's final stdout line is its record: it must stay small enough for
-a tail capture to hold it whole, whatever the full record grows to."""
+"""bench.py's closing stdout lines are its record: the full record, then a
+last line small enough for a tail capture to hold it whole, whatever the
+full record grows to.  Also the registry surface bench times: ``Q.fn``
+honours the sf dir, ``Q.run`` applies the query's pin."""
 
 from __future__ import annotations
 
 import json
 
 import bench
+from pdf_extractor_spark.queries import QUERIES
+from pdf_extractor_spark.queries.base import Q
 
 
 def _pair(tps_n: float, tps_4n: float, accepted: bool) -> dict:
@@ -20,10 +24,9 @@ def _pair(tps_n: float, tps_4n: float, accepted: bool) -> dict:
     }
 
 
-def test_summary_of_full_record_is_compact_and_parses():
+def _r05_payload() -> dict:
     """A record shaped like the one whose final line outgrew the capture:
     33 timed queries plus the extraction wall, 3 scaling pairs."""
-    assert len(bench.HEADLINE) == 33
     queries = {name: 1.234 for name in bench.HEADLINE}
     queries["extract_pipeline"] = 10.993
     ctl = {"md5_s": 0.587, "bw_s": 0.31}
@@ -32,7 +35,7 @@ def test_summary_of_full_record_is_compact_and_parses():
         _pair(8935.9, 29612.2, True),
         _pair(9353.9, 33087.6, True),
     ]
-    payload = {
+    return {
         "metric": "bench_total_wall",
         "value": 67.812,
         "unit": "sec",
@@ -64,6 +67,11 @@ def test_summary_of_full_record_is_compact_and_parses():
             "basis": "median of 2 control-gated matched pairs",
         },
     }
+
+
+def test_summary_of_full_record_is_compact_and_parses():
+    assert len(bench.HEADLINE) == 33
+    payload = _r05_payload()
     assert len(json.dumps(payload)) > 1024   # the full line does not fit
 
     line = json.dumps(bench.summary(payload))
@@ -103,3 +111,29 @@ def test_summary_before_scaling_runs():
         "efficiency": None, "basis": "not_run", "n_pairs": 0,
         "n_accepted": 0, "note": "terminated mid-measurement",
     }
+
+
+def test_final_emit_keeps_the_full_record(capsys):
+    """The run ends with the full record (per-pair tps, controls and
+    ``accepted`` flags) and then the compact summary as the last line."""
+    payload = _r05_payload()
+    bench.emit_final(payload)
+    lines = capsys.readouterr().out.splitlines()
+    assert len(lines[-1].encode()) < 1024
+    assert json.loads(lines[-1]) == bench.summary(payload)
+    full = json.loads(lines[-2])
+    assert full["scaling"]["pairs"] == payload["scaling"]["pairs"]
+
+
+def test_headline_names_are_registered():
+    assert set(bench.HEADLINE) <= set(QUERIES)
+
+
+def test_pinned_query_runs_at_its_pin():
+    q = Q("x", fn=lambda s, d: d, sql=None, sf_pin="/pin")
+    assert q.run(None, "/other") == "/pin"
+
+
+def test_unpinned_query_runs_at_the_given_dir():
+    q = Q("x", fn=lambda s, d: d, sql=None)
+    assert q.run(None, "/other") == "/other"

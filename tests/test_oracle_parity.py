@@ -116,10 +116,10 @@ def _pinned_con(sf_dir: str):
 
 @pytest.mark.parametrize("q", SQL_CHECKED, ids=lambda q: q.name)
 def test_query_matches_oracle(q, spark, oracle):
-    # sf-pinned queries read their pin THEMSELVES (the registry fn
-    # ignores the harness dir) — pass the module default deliberately so
-    # a regression back to trusting sf_dir turns this red
-    sdf = q.fn(spark, SF_DIR)
+    # sf-pinned queries read their pin THEMSELVES (Q.run ignores the
+    # harness dir) — pass the module default deliberately so a
+    # regression back to trusting sf_dir turns this red
+    sdf = q.run(spark, SF_DIR)
     s_cols = sdf.columns
     s_rows = [tuple(r) for r in sdf.collect()]
 
@@ -162,7 +162,7 @@ def test_query_matches_oracle(q, spark, oracle):
 
 @pytest.mark.parametrize("q", ROWS_ONLY, ids=lambda q: q.name)
 def test_rows_only_queries_run(q, spark):
-    sdf = q.fn(spark, SF_DIR)
+    sdf = q.run(spark, SF_DIR)
     assert len(sdf.columns) > 0
     assert sdf.count() >= 0
 
@@ -177,19 +177,3 @@ def test_entry_contract(spark):
     assert set(sqls) <= set(qs)
     assert len(qs) >= 30
 
-
-def test_oracle_sql_membership_is_lazy():
-    """Mapping's default __contains__/.get delegate to __getitem__ —
-    which builds the full oracle SQL (mirror k-means fit included).  A
-    membership probe must stay free."""
-    from pdf_extractor_spark.queries import _LazyOracleSQL
-    from pdf_extractor_spark.queries.base import Q
-
-    def boom() -> str:
-        raise AssertionError("membership probe must not build SQL")
-
-    m = _LazyOracleSQL([Q(name="x", fn=lambda s, d: None, sql=boom)])
-    assert "x" in m and "y" not in m
-    assert m.get("y") is None
-    with pytest.raises(AssertionError, match="must not build"):
-        m["x"]
