@@ -145,11 +145,19 @@ def ambient_controls() -> dict:
     return {"md5_s": md5_control(), "bw_s": bw_control()}
 
 
+def control_margin(controls: list[dict]) -> dict:
+    """Per control, the worst of these readings ÷ that control's cutoff
+    (band × quiet reference), 3 places; ≤ 1.0 is in band."""
+    return {
+        "md5": round(max(c["md5_s"] for c in controls)
+                     / (MD5_BAND * MD5_CONTROL_QUIET_REF), 3),
+        "bw": round(max(c["bw_s"] for c in controls)
+                    / (BW_BAND * BW_CONTROL_QUIET_REF), 3),
+    }
+
+
 def controls_quiet(c: dict) -> bool:
-    return (
-        c["md5_s"] <= MD5_BAND * MD5_CONTROL_QUIET_REF
-        and c["bw_s"] <= BW_BAND * BW_CONTROL_QUIET_REF
-    )
+    return all(m <= 1.0 for m in control_margin([c]).values())
 
 
 BENCH_CONVS = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS", "20000"))
@@ -167,6 +175,8 @@ def summary(payload: dict) -> dict:
     out["extraction"] = {
         k: ext.get(k) for k in ("turns_per_sec", "converged", "window_quiet")
     }
+    if ext.get("controls"):
+        out["extraction"]["control_margin"] = control_margin(ext["controls"])
     out["scaling"] = {
         "efficiency": sc.get("efficiency"),
         "basis": sc.get("basis") or sc.get("status")
@@ -174,6 +184,9 @@ def summary(payload: dict) -> dict:
         "n_pairs": len(pairs),
         "n_accepted": sum(p["accepted"] for p in pairs),
     }
+    accepted = [c for p in pairs if p["accepted"] for c in p["controls"]]
+    if accepted:
+        out["scaling"]["control_margin"] = control_margin(accepted)
     if "note" in sc:
         out["scaling"]["note"] = sc["note"]
     return out

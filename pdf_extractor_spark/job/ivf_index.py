@@ -34,9 +34,11 @@ silently lost).  ``search`` is lock-free; a search racing an offline
 rebuild may fail on the swept old generation and should be retried —
 never silently wrong.
 
-Fit, assignment, probe, and scoring all reuse the exact expressions of
-``queries/similarity.py``, so ``search`` over a freshly built index is
-row-identical to the ``ann_ivf`` query on the same corpus
+Fit, assignment and probe reuse the expressions of
+``queries/similarity.py``, and ``search`` ends in the same
+``_probed_top_k`` step (join, self-drop, cosine, per-query top-k) as the
+``ann_ivf`` query, so a search over a freshly built index is
+row-identical to ``ann_ivf`` on the same corpus by construction
 (tests/test_ivf_index.py pins that, plus the partition-pruned plan).
 """
 
@@ -64,7 +66,7 @@ from pdf_extractor_spark.queries.similarity import (
     _assign_cells,
     _fitted_centroids,
     _probe_cells,
-    _with_cosine,
+    _probed_top_k,
 )
 
 
@@ -265,15 +267,4 @@ def search(
             F.col("vec_id").alias("n_id"),
             F.col("embedding").alias("n_emb"),
         )
-    cand = probes.join(cells, "cell_id")
-    if exclude_self:
-        cand = cand.filter(F.col("q_id") != F.col("n_id"))
-    scored = _with_cosine(cand, "q_emb", "n_emb")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select("q_id", "rank", "n_id", "score", "cell_id")
-    )
+    return _probed_top_k(probes, cells, top_k, exclude_self)

@@ -187,8 +187,13 @@ def main(argv: list[str] | None = None) -> int:
     pe.add_argument("--generate", type=int, default=0,
                     help="generate N synthetic conversations instead")
     pe.add_argument("--output", required=True)
-    pe.add_argument("--buckets", type=int, default=32)
-    pe.add_argument("--batches", type=int, default=4)
+    from pdf_extractor_spark.job.sink import (
+        DEFAULT_N_BATCHES,
+        DEFAULT_N_BUCKETS,
+    )
+
+    pe.add_argument("--buckets", type=int, default=DEFAULT_N_BUCKETS)
+    pe.add_argument("--batches", type=int, default=DEFAULT_N_BATCHES)
     pe.set_defaults(fn=cmd_extract)
 
     pa = sub.add_parser("audit", help="show lineage table of a run")

@@ -57,13 +57,6 @@ from pdf_extractor_spark.job.extract import run_extract
 DEFAULT_N_BUCKETS = 32
 DEFAULT_N_BATCHES = 4
 
-_SPAN_COLS = [
-    "conv_id", "turn_idx", "span_id", "question_latex", "text",
-    "turn_start", "turn_end", "kind", "n_fragments", "had_reference",
-    "sk_chapter", "sk_question", "sk_suffix",
-]
-
-
 def _bucket_col(n_buckets: int):
     return F.pmod(F.crc32(F.col("conv_id")), F.lit(n_buckets)).cast("int")
 
@@ -260,9 +253,7 @@ def run_resumable(
         spans = spans.withColumn("bucket", _bucket_col(n_buckets))
 
         data_path = os.path.join(out_dir, "data", f"batch={batch_id}")
-        spans.select(*_SPAN_COLS, "bucket").write.mode(
-            "overwrite"
-        ).parquet(data_path)
+        spans.write.mode("overwrite").parquet(data_path)
 
         # per-bucket lineage + metrics, computed from the just-written
         # files so the checksum describes exactly what was committed

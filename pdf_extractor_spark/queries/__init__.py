@@ -40,28 +40,28 @@ _BASE: list[Q] = (
     + relational.QUERIES
 )
 
-# queries whose engine code or oracle changed in round 5
-_CHANGED_R5 = [
-    "ann_ivf_pq",            # new: PQ-compressed IVF search (ADC scoring)
-    "ann_ivf_pq_rerank",     # new: ADC shortlist + exact-cosine refine
-    "ann_ivf_scaled",        # new: K>floor quantizer fit
-    "audit_consistency",     # new: resumable-sink lineage invariant
-    "pack_sequences",        # rewritten on real BPE token counts
-    "source_overlap",        # repartition key fix (ADVICE r4)
-    "dedup_semantic",        # perf work shares the pair/fit caches
-    "dedup_embedding_cosine",
+# queries whose engine code changed since the r05 driver record
+_CHANGED = [
+    "cosine_topk", "ann_ivf", "ann_ivf_scaled", "ann_ivf_pq",
+    "ann_ivf_pq_rerank", "dedup_exact", "dedup_minhash_lsh",
+    "dedup_ngram_jaccard", "dedup_clusters", "dedup_apply",
+    "decontaminate", "dup_passages", "source_overlap",
+    "dedup_embedding_cosine", "dedup_semantic", "audit_consistency",
+    "pack_sequences",
 ]
 
-# the 14 queries whose last driver row is CORRECTNESS_r03 (outside the
-# r4 window) — rotated to the front this round
+# the 18 queries with no row in CORRECTNESS_r05 (outside the r5 window)
+# — rotated to the front this round
 _STALE_ROTATION = [
-    "priority_counts", "part_filter", "lookup_join", "anti_resume",
-    "latest_wins", "forward_fill", "sessionize", "running_total",
-    "sort_key", "explode_tokens", "group_concat", "range_slice",
-    "topk_orders", "union_dedupe",
+    "truncate_preview", "lang_id", "quality_score", "quality_bins",
+    "token_count", "bpe_encode", "curation_route", "fingerprint",
+    "repetition_stats", "source_mix_sample", "pii_redact",
+    "strip_boilerplate", "vocab_topk", "event_minute_windows",
+    "suppliers_per_region", "revenue_by_nation",
+    "top_customers_by_segment", "pricing_summary",
 ]
 
-_front = _CHANGED_R5 + _STALE_ROTATION
+_front = _CHANGED + _STALE_ROTATION
 _by_name = {q.name: q for q in _BASE}
 assert all(n in _by_name for n in _front), "rotation names drifted"
 ALL: list[Q] = [_by_name[n] for n in _front] + [

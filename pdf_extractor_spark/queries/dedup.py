@@ -36,7 +36,7 @@ the driver.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.queries.base import (
@@ -146,6 +146,22 @@ FROM corpus GROUP BY md5(text) HAVING count(*) > 1
 
 # -------------------------------------------------------------- shingling
 
+def _shingle_array() -> Column:
+    """The ``text`` column's K-word shingles (space-split, empty tokens
+    dropped, joined back with single spaces), in document order."""
+    tokens = F.filter(F.split("text", " "), lambda t: t != "")
+    # sequence(1, 0) yields a DESCENDING [1, 0] (step defaults to -1 when
+    # start > stop), so slice(tokens, 0, K) would throw on docs with fewer
+    # than K tokens — guard to an empty index array instead.
+    idx = F.when(
+        F.size(tokens) >= _SHINGLE_K,
+        F.sequence(F.lit(1), F.size(tokens) - (_SHINGLE_K - 1)),
+    ).otherwise(F.array().cast("array<int>"))
+    return F.transform(
+        idx, lambda i: F.array_join(F.slice(tokens, i, _SHINGLE_K), " ")
+    )
+
+
 def _shingles(c: DataFrame) -> DataFrame:
     """doc_id → distinct K-word shingles.
 
@@ -160,19 +176,8 @@ def _shingles(c: DataFrame) -> DataFrame:
     """
     n = int(c.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     c = c.repartition(n, "doc_id")
-    tokens = F.filter(F.split("text", " "), lambda t: t != "")
-    # sequence(1, 0) yields a DESCENDING [1, 0] (step defaults to -1 when
-    # start > stop), so slice(tokens, 0, K) would throw on docs with fewer
-    # than K tokens — guard to an empty index array instead.
-    idx = F.when(
-        F.size(tokens) >= _SHINGLE_K,
-        F.sequence(F.lit(1), F.size(tokens) - (_SHINGLE_K - 1)),
-    ).otherwise(F.array().cast("array<int>"))
-    sh = F.transform(
-        idx, lambda i: F.array_join(F.slice(tokens, i, _SHINGLE_K), " ")
-    )
     return (
-        c.select("doc_id", F.explode(sh).alias("shingle"))
+        c.select("doc_id", F.explode(_shingle_array()).alias("shingle"))
         .distinct()
     )
 
@@ -900,20 +905,12 @@ def _source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round-robin: 'source' has ~dozens of values, so hashing on it would
     # collapse the hash-heavy shingle map work into n_sources tasks
     d = d.repartition(n)
-    tokens = F.filter(F.split("text", " "), lambda t: t != "")
-    idx = F.when(
-        F.size(tokens) >= _SHINGLE_K,
-        F.sequence(F.lit(1), F.size(tokens) - (_SHINGLE_K - 1)),
-    ).otherwise(F.array().cast("array<int>"))
-    sh = F.transform(
-        idx, lambda i: F.array_join(F.slice(tokens, i, _SHINGLE_K), " ")
-    )
     # Both consumers below branch off the SAME folded table; Spark's
     # ReusedExchange serves the second branch from the first's shuffle
     # files, so the expensive shingle map side runs once — no pinned
     # localCheckpoint blocks needed (ADVICE r3: cache lifetime).
     per_shingle = (
-        d.select("source", F.explode(sh).alias("shingle"))
+        d.select("source", F.explode(_shingle_array()).alias("shingle"))
         .groupBy("shingle")
         .agg(F.array_sort(F.collect_set("source")).alias("srcs"))
     )

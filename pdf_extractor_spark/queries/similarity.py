@@ -102,24 +102,40 @@ def _cos_sql(a: str, b: str) -> str:
     return rhu_sql(f"{dot} / ({na} * {nb})", 4)
 
 
+def _as_queries(e: DataFrame) -> DataFrame:
+    """The query side of every search: the first ``_N_QUERIES`` vectors
+    of an embeddings frame as (q_id, q_emb)."""
+    return e.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    )
+
+
+def _as_neighbors(e: DataFrame) -> DataFrame:
+    """The corpus side of every search: all vectors as (n_id, n_emb)."""
+    return e.select(
+        F.col("vec_id").alias("n_id"), F.col("embedding").alias("n_emb")
+    )
+
+
+def _top_k(scored: DataFrame, order: Column, k: int = _TOP_K) -> DataFrame:
+    """The first ``k`` rows per ``q_id`` under ``order`` (ties → lowest
+    n_id), numbered 1..k in ``rank`` — the one Spark-side ranking rule
+    every search shares with its oracle's ``row_number()``."""
+    w = Window.partitionBy("q_id").orderBy(order, F.asc("n_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+
+
 def _cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
-    q = (
-        e.filter(F.col("vec_id") < _N_QUERIES)
-        .select(F.col("vec_id").alias("q_id"),
-                F.col("embedding").alias("q_emb"))
-    )
-    pairs = load(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("n_id"), F.col("embedding").alias("n_emb")
-    ).crossJoin(F.broadcast(q))
+    pairs = _as_neighbors(e).crossJoin(F.broadcast(_as_queries(e)))
     scored = _with_cosine(pairs, "q_emb", "n_emb").filter(
         F.col("q_id") != F.col("n_id")
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("q_id", "rank", "n_id", "score")
+    return _top_k(scored, F.desc("score")).select(
+        "q_id", "rank", "n_id", "score"
     )
 
 
@@ -287,46 +303,36 @@ def _probe_cells(df: DataFrame, emb_col: str, cents: list[list[float]],
     return df.select("*", F.explode(cell_ids).alias("cell_id"))
 
 
+def _probed_top_k(probes: DataFrame, cells: DataFrame, k: int = _TOP_K,
+                  exclude_self: bool = True) -> DataFrame:
+    """The search step after the probe: candidates from the probed cells
+    only (the ONE shuffle of a search, keyed on cell_id, touching
+    ~n_probe/K of the corpus), optionally without the query itself, then
+    rhu4 cosine and the per-query top-``k``.  ``probes`` carries
+    (q_id, q_emb, cell_id), ``cells`` (n_id, n_emb, cell_id)."""
+    cand = probes.join(cells, "cell_id")
+    if exclude_self:
+        cand = cand.filter(F.col("q_id") != F.col("n_id"))
+    scored = _with_cosine(cand, "q_emb", "n_emb")
+    return _top_k(scored, F.desc("score"), k).select(
+        "q_id", "rank", "n_id", "score", "cell_id"
+    )
+
+
 def _ivf_search(corpus: DataFrame, queries: DataFrame,
                 cents: list[list[float]]) -> DataFrame:
-    """The IVF search shape shared by ann_ivf and ann_ivf_scaled:
-    narrow assignment, narrow query probe, one cell_id-keyed join."""
-    # assignment: narrow argmax against the broadcast-as-literals fit
-    cells = _assign_cells(
-        corpus.select(F.col("vec_id").alias("n_id"),
-                      F.col("embedding").alias("n_emb")),
-        cents, "n_emb",
-    )
-
-    # queries probe their top-N_PROBE cells (narrow explode)
-    probes = _probe_cells(
-        queries.select(F.col("vec_id").alias("q_id"),
-                       F.col("embedding").alias("q_emb")),
-        "q_emb", cents, _N_PROBE,
-    )
-
-    # search only within probed cells — the ONLY shuffle in the query,
-    # keyed on cell_id, touching ~n_probe/k of the corpus
-    cand = probes.join(cells, "cell_id").filter(
-        F.col("q_id") != F.col("n_id")
-    )
-    scored = _with_cosine(cand, "q_emb", "n_emb")
-    w_rank = Window.partitionBy("q_id").orderBy(
-        F.desc("score"), F.asc("n_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("q_id", "rank", "n_id", "score", "cell_id")
-    )
+    """The IVF search of ann_ivf and ann_ivf_scaled: narrow assignment of
+    the ``corpus`` (vec_id, embedding) rows, narrow top-``_N_PROBE`` probe
+    of the ``queries`` (q_id, q_emb) rows, then ``_probed_top_k`` — the
+    same step ``job/ivf_index.search`` ends in."""
+    cells = _assign_cells(_as_neighbors(corpus), cents, "n_emb")
+    probes = _probe_cells(queries, "q_emb", cents, _N_PROBE)
+    return _probed_top_k(probes, cells)
 
 
 def _ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
-    return _ivf_search(
-        e, e.filter(F.col("vec_id") < _N_QUERIES),
-        _fitted_centroids(spark, sf_dir),
-    )
+    return _ivf_search(e, _as_queries(e), _fitted_centroids(spark, sf_dir))
 
 
 # ----------------------------------------- scaled-K fit (above the floor)
@@ -390,10 +396,9 @@ def _ann_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     the adversarial pytest (VERDICT r4 ask #5).  Oracle = checked-in
     expected parquet from the independent mirror expansion + fit +
     search (oracle_mirror/ivf.py, scripts/gen_expected.py)."""
-    e = load(spark, sf_dir, "embeddings")
     return _ivf_search(
         _expanded_corpus(spark, sf_dir),
-        e.filter(F.col("vec_id") < _N_QUERIES),
+        _as_queries(load(spark, sf_dir, "embeddings")),
         _scaled_centroids(spark, sf_dir),
     )
 
@@ -465,25 +470,14 @@ def _adc_expr(qn, codes_col, cb_lits: list[Column], dsub: int) -> Column:
     return acc
 
 
-def _ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ: the memory-scale ANN path (FAISS ``IVF,PQ8`` shape).
-
-    ann_ivf bounds how many candidates a probe touches; PQ bounds what
-    each candidate COSTS: the index stores M=8 one-byte codes per vector
-    instead of the 256-byte raw embedding (32× smaller — 100 TB of fp32
-    embeddings compress to ~3 TB of codes), and scoring is 8 lookup-adds
-    per candidate instead of a 64-wide cosine.  Vectors are L2-normalized
-    before encoding, so ascending approximate squared-L2 ranks identically
-    to descending approximate cosine (‖q−v‖² = 2−2·cos on unit vectors).
-
-    Plan shape: both fits are bounded driver-side samples broadcast as
-    literals; cell assignment, PQ encode, and the query probe are narrow
-    per-row expressions; the ONLY shuffle is the cell_id-keyed
-    probe-candidate join (same as ann_ivf); ADC scoring and the per-query
-    top-k window run on the ~n_probe·128-candidate result.  Oracle =
-    checked-in expected parquet from the INDEPENDENT mirror fit + encode
-    + search (oracle_mirror/pq.py + scripts/gen_expected.py);
-    tests/test_pq.py pins bit-equality of the two PQ fits."""
+def _pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stage 1 of both PQ searches: every probed-cell candidate pair as
+    (q_id, n_id, cell_id, adist), adist the rhu4 ADC distance between
+    the exact normalized query and the candidate's PQ codes.  Both fits
+    are bounded driver-side samples broadcast as literals; cell
+    assignment, PQ encode and the query probe are narrow per-row
+    expressions; the ONLY shuffle is the cell_id-keyed probe-candidate
+    join (same as ann_ivf)."""
     cents = _fitted_centroids(spark, sf_dir)
     books = _pq_codebooks(spark, sf_dir)
     dsub = len(books[0][0])
@@ -497,12 +491,9 @@ def _ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus side: narrow cell assignment + narrow PQ encode — the
     # norm is materialized in its own projection so the unit-vector
     # transform doesn't re-run the fold per element
-    cells = _assign_cells(
-        e.select(F.col("vec_id").alias("n_id"),
-                 F.col("embedding").alias("n_emb")),
-        cents, "n_emb",
-    ).select("n_id", "cell_id", "n_emb",
-             _norm(_dvec(F.col("n_emb"))).alias("nv"))
+    cells = _assign_cells(_as_neighbors(e), cents, "n_emb").select(
+        "n_id", "cell_id", "n_emb", _norm(_dvec(F.col("n_emb"))).alias("nv")
+    )
     coded = cells.select(
         "n_id", "cell_id",
         F.array(*_pq_code_exprs(
@@ -511,35 +502,43 @@ def _ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # query side: probe the top-N_PROBE cells, carry the exact
-    # normalized query vector for ADC
-    probes = _probe_cells(
-        e.filter(F.col("vec_id") < _N_QUERIES)
-         .select(F.col("vec_id").alias("q_id"),
-                 F.col("embedding").alias("q_emb")),
-        "q_emb", cents, _N_PROBE,
-    ).select("q_id", "cell_id", "q_emb",
-             _norm(_dvec(F.col("q_emb"))).alias("nv"))
+    # normalized query vector for ADC (same two-projection norm split)
+    probes = _probe_cells(_as_queries(e), "q_emb", cents, _N_PROBE).select(
+        "q_id", "cell_id", "q_emb", _norm(_dvec(F.col("q_emb"))).alias("nv")
+    )
     probes = probes.select(
         "q_id", "cell_id",
         _unit_over(F.col("q_emb"), F.col("nv")).alias("qn"),
     )
 
-    # the one shuffle: candidates from probed cells only
     cand = probes.join(coded, "cell_id").filter(
         F.col("q_id") != F.col("n_id")
     )
-    scored = cand.select(
+    return cand.select(
         "q_id", "n_id", "cell_id",
         rhu(_adc_expr(F.col("qn"), F.col("codes"), cb_lits, dsub), 4)
         .alias("adist"),
     )
-    w_rank = Window.partitionBy("q_id").orderBy(
-        F.asc("adist"), F.asc("n_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("q_id", "rank", "n_id", "adist", "cell_id")
+
+
+def _ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-PQ: the memory-scale ANN path (FAISS ``IVF,PQ8`` shape).
+
+    ann_ivf bounds how many candidates a probe touches; PQ bounds what
+    each candidate COSTS: the index stores M=8 one-byte codes per vector
+    instead of the 256-byte raw embedding (32× smaller — 100 TB of fp32
+    embeddings compress to ~3 TB of codes), and scoring is 8 lookup-adds
+    per candidate instead of a 64-wide cosine.  Vectors are L2-normalized
+    before encoding, so ascending approximate squared-L2 ranks identically
+    to descending approximate cosine (‖q−v‖² = 2−2·cos on unit vectors).
+
+    Plan shape: ``_pq_scored``, then the per-query top-k window on the
+    ~n_probe·128-candidate result.  Oracle = checked-in expected parquet
+    from the INDEPENDENT mirror fit + encode + search (oracle_mirror/pq.py
+    + scripts/gen_expected.py); tests/test_pq.py pins bit-equality of the
+    two PQ fits."""
+    return _top_k(_pq_scored(spark, sf_dir), F.asc("adist")).select(
+        "q_id", "rank", "n_id", "adist", "cell_id"
     )
 
 
@@ -553,83 +552,28 @@ def _ann_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_pq.py pins exactly that trade).
 
     Stage 1 scores every probed-cell candidate with the 8-lookup ADC
-    distance and keeps the top ``_SHORTLIST_R`` per query.  Stage 2
-    fetches ONLY those R×n_queries raw vectors — the shortlist is tiny,
-    so the re-fetch is a BROADCAST join against the embeddings scan (no
-    corpus shuffle; at 100 TB the refine stage reads back a few thousand
-    rows, not the index) — and re-ranks them by exact rhu4 cosine.
+    distance (``_pq_scored``) and keeps the top ``_SHORTLIST_R`` per
+    query.  Stage 2 fetches ONLY those R×n_queries raw vectors — the
+    shortlist is tiny, so the re-fetch is a BROADCAST join against the
+    embeddings scan (no corpus shuffle; at 100 TB the refine stage reads
+    back a few thousand rows, not the index) — and re-ranks them by
+    exact rhu4 cosine.
 
     Output ranks are exact-cosine ranks over the shortlist; the oracle
     is the independent mirror's identical two-stage search
     (scripts/gen_expected.py gen_ann_ivf_pq_rerank)."""
-    cents = _fitted_centroids(spark, sf_dir)
-    books = _pq_codebooks(spark, sf_dir)
-    dsub = len(books[0][0])
-    cb_lits = [
-        F.expr(_sql_double_matrix([[float(x) for x in c] for c in book]))
-        for book in books
-    ]
-
-    e = load(spark, sf_dir, "embeddings")
-
-    cells = _assign_cells(
-        e.select(F.col("vec_id").alias("n_id"),
-                 F.col("embedding").alias("n_emb")),
-        cents, "n_emb",
-    ).select("n_id", "cell_id", "n_emb",
-             _norm(_dvec(F.col("n_emb"))).alias("nv"))
-    coded = cells.select(
-        "n_id", "cell_id",
-        F.array(*_pq_code_exprs(
-            _unit_over(F.col("n_emb"), F.col("nv")), cb_lits, dsub
-        )).alias("codes"),
-    )
-
-    queries = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    probes = _probe_cells(queries, "q_emb", cents, _N_PROBE).select(
-        "q_id", "cell_id",
-        _norm(_dvec(F.col("q_emb"))).alias("nv"), "q_emb",
-    )
-    probes = probes.select(
-        "q_id", "cell_id",
-        _unit_over(F.col("q_emb"), F.col("nv")).alias("qn"),
-    )
-
-    # stage 1: ADC shortlist (top-R per query by approximate distance)
-    cand = probes.join(coded, "cell_id").filter(
-        F.col("q_id") != F.col("n_id")
-    )
-    scored = cand.select(
-        "q_id", "n_id",
-        rhu(_adc_expr(F.col("qn"), F.col("codes"), cb_lits, dsub), 4)
-        .alias("adist"),
-    )
-    w_short = Window.partitionBy("q_id").orderBy(
-        F.asc("adist"), F.asc("n_id")
-    )
-    shortlist = (
-        scored.withColumn("r", F.row_number().over(w_short))
-        .filter(F.col("r") <= _SHORTLIST_R)
-        .select("q_id", "n_id")
-    )
+    shortlist = _top_k(
+        _pq_scored(spark, sf_dir), F.asc("adist"), _SHORTLIST_R
+    ).select("q_id", "n_id")
 
     # stage 2: fetch the R×n_queries raw vectors via BROADCAST joins and
     # re-rank by exact cosine (rhu4, same contract as cosine_topk)
-    fetched = e.select(
-        F.col("vec_id").alias("n_id"), F.col("embedding").alias("n_emb")
-    ).join(F.broadcast(shortlist), "n_id")
-    pairs = fetched.join(F.broadcast(queries), "q_id")
-    exact = _with_cosine(pairs, "q_emb", "n_emb")
-    w_rank = Window.partitionBy("q_id").orderBy(
-        F.desc("score"), F.asc("n_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("q_id", "rank", "n_id", "score")
-    )
+    e = load(spark, sf_dir, "embeddings")
+    fetched = _as_neighbors(e).join(F.broadcast(shortlist), "n_id")
+    pairs = fetched.join(F.broadcast(_as_queries(e)), "q_id")
+    return _top_k(
+        _with_cosine(pairs, "q_emb", "n_emb"), F.desc("score")
+    ).select("q_id", "rank", "n_id", "score")
 
 
 def _embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

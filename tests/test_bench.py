@@ -86,14 +86,29 @@ def test_summary_of_full_record_is_compact_and_parses():
             "turns_per_sec": 21770.3,
             "converged": False,
             "window_quiet": False,
+            "control_margin": {"md5": 0.97, "bw": 0.883},
         },
         "scaling": {
             "efficiency": 0.856,
             "basis": "median of 2 control-gated matched pairs",
             "n_pairs": 3,
             "n_accepted": 2,
+            "control_margin": {"md5": 0.881, "bw": 0.869},
         },
     }
+
+
+def test_summary_reports_control_margins():
+    """Each control's worst reading ÷ its cutoff: the r05 extraction
+    window read md5 0.587 s against 1.10 × 0.55 s and bw 0.31 s against
+    1.30 × 0.27 s — in band, by 3% and 12%."""
+    got = bench.summary(_r05_payload())
+    assert got["extraction"]["control_margin"] == {"md5": 0.97, "bw": 0.883}
+    assert len(json.dumps(got).encode()) < 1024
+    # the gate is the margin: in band iff every margin ≤ 1.0
+    assert bench.controls_quiet({"md5_s": 0.605, "bw_s": 0.351})
+    assert not bench.controls_quiet({"md5_s": 0.61, "bw_s": 0.351})
+    assert not bench.controls_quiet({"md5_s": 0.605, "bw_s": 0.36})
 
 
 def test_summary_before_scaling_runs():
