@@ -5,39 +5,39 @@ Re-expresses the reference's checkpoint protocol
 tmp+rename, resume-skip of processed pages /root/reference/src/
 pipeline.py:172-211, delete-on-success :358-361) in Spark terms:
 
-- the unit of work is a **bucket batch**: conv_ids are hashed into
-  ``n_buckets`` buckets (crc32 — stable across runs), batches of buckets
-  are processed independently;
-- each batch writes its span output under ``data/batch=<id>/`` and then
-  appends per-bucket audit rows (lineage + metrics + content checksum)
-  under ``audit/batch=<id>/`` — the audit write is the COMMIT POINT, so
-  a kill between data and audit leaves an uncommitted batch that is
-  simply reprocessed (deterministic pipeline ⇒ overwrite is idempotent);
+- conv_ids are hashed into ``n_buckets`` buckets (crc32 — stable across
+  runs); bucket ``b`` belongs to batch ``b % n_batches``;
+- a call extracts ONCE over every pending batch; a batch is only a
+  COMMIT UNIT: it writes its slice under ``data/batch=<id>/`` and then
+  per-bucket audit rows (lineage + metrics + content checksum) under
+  ``audit/batch=<id>/`` — the audit write is the COMMIT POINT, so a kill
+  between data and audit leaves an uncommitted batch that is simply
+  reprocessed (deterministic pipeline ⇒ overwrite is idempotent);
 - resume = read committed audit, skip committed batches (the anti-join
   analog of the reference's start_page fast-forward);
 - a ``_COMPLETE`` marker after the last batch ≙ checkpoint
   delete-on-success.
 
 Read-amplification contract (VERDICT r2 "what's wrong #2"): the input is
-STAGED ONCE into a bucket-partitioned layout (``corpus/bucket=<b>/``) and
-every batch then reads only its own bucket directories via partition
-pruning — a full run touches each input row exactly twice (one staging
-read+write, one batch read), independent of ``n_batches``.  The previous
-shape filtered the raw input per batch, scanning the full corpus
-``n_batches`` times — 300 TB of wasted scan at the 100 TB design point.
-Staging also pins resume semantics: a resumed run reads the frozen
-staged corpus, so a mutated upstream table cannot produce a
-half-old/half-new output.  tests/test_resume.py asserts the pruning plan
-and the staging layout.
+STAGED ONCE into a bucket-partitioned layout (``corpus/bucket=<b>/``)
+and a call then reads only its pending batches' bucket directories via
+partition pruning — an uninterrupted run touches each input row exactly
+twice (one staging read+write, one extraction read), independent of
+``n_batches``.  The previous shape filtered the raw input per batch,
+scanning the full corpus ``n_batches`` times — 300 TB of wasted scan at
+the 100 TB design point.  Staging also pins resume semantics: a resumed
+run reads the frozen staged corpus, so a mutated upstream table cannot
+produce a half-old/half-new output.  tests/test_resume.py asserts the
+pruning plan and the staging layout.
 
 This is the Parquet+manifest fallback of SURVEY.md §7.4.5 (no Iceberg
 runtime jar in the sandbox); the commit protocol is the same shape as an
 Iceberg snapshot-per-batch commit and lives behind these two functions so
 the writer can be swapped.
 
-At cluster scale each batch is a full Spark job over ~1/batches of the
-corpus: failure loses at most one batch of work, and the audit table
-doubles as the per-partition lineage record the north_rule requires.
+A crash wastes the crashed call's extraction of its uncommitted batches
+(the resume redoes them in one pass), and the audit table doubles as
+the per-partition lineage record the north_rule requires.
 """
 
 from __future__ import annotations
@@ -50,9 +50,10 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_extractor_spark.queries.base import xor_checksum
+from pdf_extractor_spark.queries.base import free_checkpoint, xor_checksum
 
 from pdf_extractor_spark.job.extract import run_extract
+from pdf_extractor_spark.job.upsert import _commit_pointer, _read_pointer
 
 DEFAULT_N_BUCKETS = 32
 DEFAULT_N_BATCHES = 4
@@ -123,7 +124,7 @@ def stage_corpus(
     (``corpus/bucket=<b>/``) and return (path, staged schema); reuse an
     existing complete staging (``_SUCCESS`` + markers) so resumes pay
     nothing.  This is the single full-input scan of a resumable run —
-    every batch afterwards partition-prunes to its own bucket dirs.
+    each call afterwards partition-prunes to its pending bucket dirs.
 
     The bucket count AND the staged schema are PERSISTED next to the
     staging and validated on reuse.  A resume with a different
@@ -134,17 +135,16 @@ def stage_corpus(
     so the remaining batches would commit rows derived from a phantom
     schema.  Both are hard errors, not silent partial runs.  A staging
     with ``_SUCCESS`` but missing markers is treated as incomplete
-    (crash between the parquet write and the markers) and re-staged."""
+    (crash between the parquet write and the markers) and re-staged; the
+    last marker, ``_N_BUCKETS``, is committed atomically."""
     from pyspark.sql.types import StructType
 
     corpus_dir = os.path.join(out_dir, "corpus")
-    meta_path = os.path.join(corpus_dir, "_N_BUCKETS")
     schema_path = os.path.join(corpus_dir, "_SCHEMA.json")
     staged = transcripts.withColumn("bucket", _bucket_col(n_buckets))
+    staged_n = _read_pointer(corpus_dir, "_N_BUCKETS")
     if os.path.exists(os.path.join(corpus_dir, "_SUCCESS")) and \
-            os.path.exists(meta_path) and os.path.exists(schema_path):
-        with open(meta_path) as f:
-            staged_n = int(f.read().strip())
+            staged_n is not None and os.path.exists(schema_path):
         if staged_n != n_buckets:
             raise ValueError(
                 f"staged corpus at {corpus_dir} was bucketed with "
@@ -167,8 +167,7 @@ def stage_corpus(
     # reads as an incomplete staging and is re-staged
     with open(schema_path, "w") as f:
         json.dump(json.loads(staged.schema.json()), f)
-    with open(meta_path, "w") as f:
-        f.write(f"{n_buckets}\n")
+    _commit_pointer(corpus_dir, n_buckets, "_N_BUCKETS")
     return corpus_dir, staged.schema
 
 
@@ -199,8 +198,12 @@ def run_resumable(
     n_batches: int = DEFAULT_N_BATCHES,
     fail_after_batches: int | None = None,
 ) -> dict:
-    """Run the extraction pipeline over ``transcripts`` with batch-level
-    checkpointing.  Returns summary {processed, skipped, complete}.
+    """Run the extraction pipeline ONCE over the uncommitted batches of
+    ``transcripts`` and commit them batch by batch; returns summary
+    {processed, skipped, complete}.  A batch is only a commit unit: a
+    crash before the last audit commit wastes the call's work on every
+    uncommitted batch (the resume re-extracts them), and audit ``wall_s``
+    counts from the start of the call's extraction.
 
     ``fail_after_batches`` injects a crash after N committed batches —
     the test hook mirroring /root/reference/simulate_interrupt.py.
@@ -211,7 +214,8 @@ def run_resumable(
     buckets or commit some a second time.  The counts are persisted in
     ``_LAYOUT.json`` at the output-dir root (it outlives the staging
     delete) before the first batch, and a mismatch is a hard error that
-    leaves the output dir untouched.
+    leaves the output dir untouched.  A batch with no bucket
+    (``n_buckets < n_batches``) commits an empty slice.
     """
     layout = {"n_buckets": n_buckets, "n_batches": n_batches}
     layout_path = os.path.join(out_dir, "_LAYOUT.json")
@@ -227,13 +231,10 @@ def run_resumable(
                 "with the original counts or clear the output dir"
             )
     done = committed_batches(spark, out_dir)
-    groups: dict[int, list[int]] = {}
-    for b in range(n_buckets):
-        groups.setdefault(b % n_batches, []).append(b)
-    todo = [b for b in sorted(groups) if b not in done]
+    todo = [i for i in range(n_batches) if i not in done]
+    pending = [b for b in range(n_buckets) if b % n_batches in todo]
 
     processed = 0
-    skipped = len(groups) - len(todo)
     if todo:
         # stage (or validate a reused staging) only when there is work:
         # re-running a completed output dir must not re-scan the input
@@ -245,15 +246,15 @@ def run_resumable(
             with open(tmp, "w") as f:
                 json.dump(layout, f)
             os.replace(tmp, layout_path)
-    for batch_id in todo:
-        batch_in = batch_input(spark, corpus_dir, groups[batch_id],
-                               schema=staged_schema)
         t0 = time.time()
-        spans = run_extract(batch_in.drop("bucket"))
-        spans = spans.withColumn("bucket", _bucket_col(n_buckets))
-
+        batch_in = batch_input(spark, corpus_dir, pending,
+                               schema=staged_schema)
+        spans = run_extract(batch_in.drop("bucket")).withColumn(
+            "bucket", _bucket_col(n_buckets)).localCheckpoint(eager=True)
+    for batch_id in todo:
         data_path = os.path.join(out_dir, "data", f"batch={batch_id}")
-        spans.write.mode("overwrite").parquet(data_path)
+        spans.filter(F.col("bucket") % n_batches == batch_id) \
+            .write.mode("overwrite").parquet(data_path)
 
         # per-bucket lineage + metrics, computed from the just-written
         # files so the checksum describes exactly what was committed
@@ -265,9 +266,8 @@ def run_resumable(
                 F.count(F.lit(1)).alias("n_spans"),
                 F.sum("n_fragments").cast("bigint").alias("n_fragments"),
                 F.count_if(F.col("had_reference")).alias("n_referenced"),
-                xor_checksum(
-                    "conv_id", "span_id", "text"
-                ).alias("content_checksum"),
+                xor_checksum("conv_id", "span_id", "text")
+                .alias("content_checksum"),
             )
             .withColumn("wall_s", F.lit(round(time.time() - t0, 3)))
             .withColumn("committed_at", F.current_timestamp())
@@ -278,9 +278,9 @@ def run_resumable(
         )
         processed += 1
         if fail_after_batches is not None and processed >= fail_after_batches:
-            raise RuntimeError(
-                f"injected failure after {processed} batches"
-            )
+            raise RuntimeError(f"injected failure after {processed} batches")
+    if todo:
+        free_checkpoint(spans)
 
     complete = len(committed_batches(spark, out_dir)) == n_batches
     if complete:
@@ -293,5 +293,5 @@ def run_resumable(
         corpus_dir = os.path.join(out_dir, "corpus")
         if os.path.isdir(corpus_dir):
             shutil.rmtree(corpus_dir)
-    return {"processed": processed, "skipped": skipped,
+    return {"processed": processed, "skipped": n_batches - len(todo),
             "complete": complete}

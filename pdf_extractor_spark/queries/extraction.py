@@ -112,8 +112,8 @@ def _audit_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
         sink.run_resumable(spark, transcripts_df(spark), out)
         return out
 
-    # the sink run is the expensive part (stage + 4 batch jobs): every
-    # audit_consistency call in a session reads the same committed output
+    # the sink run is the expensive part (stage, one extraction, 4 audit
+    # commits): every call in a session reads the same committed output
     out = session_memo(spark, ("audit_consistency_sink",), run_sink)
     audit = sink.read_audit(spark, out).select(
         F.col("bucket").cast("int").alias("bucket"),

@@ -344,3 +344,96 @@ def test_checksum_count_pair_detects_duplicated_write():
     pair = (xor_checksum_py(rows), len(rows))
     assert (xor_checksum_py(doubled), len(doubled)) != pair
     assert (xor_checksum_py(rows[:1]), 1) != pair
+
+
+def test_run_resumable_extracts_once_per_call(spark, tmp_path, monkeypatch):
+    """A batch is a commit unit, not an extraction unit: every call with
+    pending batches runs the flagship exactly once, whatever n_batches,
+    and a call over a complete dir runs it not at all."""
+    from pdf_extractor_spark.job import sink
+
+    calls = []
+    real_extract = sink.run_extract
+
+    def counting_extract(transcripts):
+        calls.append(1)
+        return real_extract(transcripts)
+
+    monkeypatch.setattr(sink, "run_extract", counting_extract)
+    tdf = transcripts_df(spark, n_convs=12, seed=7)
+    oneshot = _sorted_rows(run_extract(tdf))
+
+    for n_batches in (1, 4):
+        out = str(tmp_path / f"b{n_batches}")
+        calls.clear()
+        assert run_resumable(spark, tdf, out, n_batches=n_batches)[
+            "complete"
+        ]
+        assert len(calls) == 1, n_batches
+        assert _sorted_rows(read_output(spark, out)) == oneshot
+
+    # a complete dir: nothing to extract
+    calls.clear()
+    run_resumable(spark, tdf, str(tmp_path / "b4"), n_batches=4)
+    assert calls == []
+
+    # crash + resume: one extraction per call
+    out = str(tmp_path / "crash")
+    calls.clear()
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_resumable(spark, tdf, out, n_batches=4, fail_after_batches=1)
+    assert len(calls) == 1
+    assert run_resumable(spark, tdf, out, n_batches=4) == {
+        "processed": 3, "skipped": 1, "complete": True
+    }
+    assert len(calls) == 2
+    assert _sorted_rows(read_output(spark, out)) == oneshot
+
+
+def test_fewer_buckets_than_batches_completes(spark, tmp_path):
+    """With n_buckets < n_batches some batch ids own no bucket; they
+    commit an empty slice, so the run still reaches ``_COMPLETE``."""
+    tdf = transcripts_df(spark, n_convs=12, seed=7)
+    out = str(tmp_path / "out")
+    first = run_resumable(spark, tdf, out, n_buckets=2, n_batches=4)
+    assert first == {"processed": 4, "skipped": 0, "complete": True}
+    assert os.path.exists(os.path.join(out, "_COMPLETE"))
+    assert not os.path.exists(os.path.join(out, "corpus"))
+    assert committed_batches(spark, out) == {0, 1, 2, 3}
+    assert _sorted_rows(read_output(spark, out)) == \
+        _sorted_rows(run_extract(tdf))
+
+    committed = [os.path.join(out, d) for d in ("data", "audit")]
+    before = [_tree_state(d) for d in committed]
+    again = run_resumable(spark, tdf, out, n_buckets=2, n_batches=4)
+    assert again == {"processed": 0, "skipped": 4, "complete": True}
+    assert [_tree_state(d) for d in committed] == before
+
+
+def test_stage_corpus_bucket_marker_commit_is_atomic(
+    spark, tmp_path, monkeypatch
+):
+    """A crash while committing ``_N_BUCKETS`` must leave no marker at
+    all (an incomplete staging that is re-staged), never a torn one that
+    fails every later resume."""
+    tdf = transcripts_df(spark, n_convs=8, seed=23)
+    out = str(tmp_path / "out")
+    corpus = os.path.join(out, "corpus")
+
+    def failing_replace(src, dst):
+        raise OSError("injected rename failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", failing_replace)
+        with pytest.raises(OSError, match="injected rename failure"):
+            stage_corpus(tdf, out, n_buckets=4)
+    assert os.path.exists(os.path.join(corpus, "_SUCCESS"))
+    assert not os.path.exists(os.path.join(corpus, "_N_BUCKETS"))
+
+    p, _ = stage_corpus(tdf, out, n_buckets=4)
+    assert open(os.path.join(p, "_N_BUCKETS")).read().strip() == "4"
+    assert run_resumable(spark, tdf, out, n_buckets=4, n_batches=2)[
+        "complete"
+    ]
+    assert _sorted_rows(read_output(spark, out)) == \
+        _sorted_rows(run_extract(tdf))
