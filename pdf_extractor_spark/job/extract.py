@@ -199,6 +199,14 @@ def _stitch(spans: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
+def _doc_order() -> Column:
+    """A span's (turn_start, head_seq) document position as one scalar
+    max_by key; head_seq is a within-turn fragment index, far below 1e6."""
+    return (
+        F.col("turn_start").cast("long") * F.lit(1_000_000) + F.col("head_seq")
+    )
+
+
 def _link_and_stitch_blocks(parsed: DataFrame, block_size: int) -> DataFrame:
     """Level 1: per-(conv, block) id fill, then ``_stitch`` within blocks.
     Each fragment enters as a one-fragment span, so the id fill and the
@@ -223,32 +231,24 @@ def _link_and_stitch_blocks(parsed: DataFrame, block_size: int) -> DataFrame:
     )
 
     # cross-block carry: last non-null qid of each block, forward-filled
-    # over the (tiny) per-conversation block sequence
-    # max_by on a scalar order key keeps this a partial+final HASH
-    # aggregate — max(struct(...)) would force SortAggregate, which AQE
-    # then plans as one task (a measured 7.7s serial straggler at 1M
-    # turns).  seq is a within-turn fragment index, far below 1e6.
-    order_key = (
-        F.col("turn_start").cast("long") * F.lit(1_000_000) + F.col("head_seq")
-    )
-    block_last = (
-        df.filter(F.col("question_id").isNotNull())
-        .groupBy(*keys)
-        .agg(F.max_by("question_id", order_key).alias("blk_qid"))
-    )
-    # carry rows are needed for EVERY block present in df, not only the
-    # blocks that themselves contain a qid:
-    blocks = df.select(*keys).distinct()
-    carry_all = (
-        blocks.join(block_last, keys, "left")
-        .withColumn(
-            "carry_qid",
+    # over the (tiny) per-conversation block sequence.  One aggregate over
+    # every block: max_by skips NULL orderings, so a block without a qid
+    # gets a NULL blk_qid.  It plans as a partial+final SortAggregate (the
+    # value is a string), so the partial side runs in every scan task and
+    # no single task sees a whole conversation (BENCH.md finding 2).
+    carry = (
+        df.groupBy(*keys)
+        .agg(F.max_by(
+            "question_id",
+            F.when(F.col("question_id").isNotNull(), _doc_order()),
+        ).alias("blk_qid"))
+        .select(
+            *keys,
             F.last("blk_qid", ignorenulls=True).over(
                 Window.partitionBy("conv_id").orderBy("blk")
                 .rowsBetween(Window.unboundedPreceding, -1)
-            ),
+            ).alias("carry_qid"),
         )
-        .select(*keys, "carry_qid")
     )
 
     qid = F.when(
@@ -261,7 +261,7 @@ def _link_and_stitch_blocks(parsed: DataFrame, block_size: int) -> DataFrame:
         F.concat(qid, F.coalesce(F.col("part_id"), F.lit(""))),
         F.concat(F.lit("t"), F.col("turn_start").cast("string")),
     )
-    df = df.join(carry_all, keys, "left").withColumn("span_id", span_id)
+    df = df.join(carry, keys, "left").withColumn("span_id", span_id)
     return _stitch(df, keys)
 
 
@@ -325,31 +325,27 @@ def _detect_ref_col(question: Column, answer: Column) -> Column:
 def _resolve_references(spans: DataFrame) -> DataFrame:
     """Bounded-fixpoint resolution, engineered so the iteration never
     touches the full span table: the loop runs over only (a) spans that
-    HAVE a reference and (b) the lookup entries they need (semi-join
-    reduction) — at 100 TB the referenced fraction is the working set,
-    not the corpus."""
+    HAVE a reference and (b) the lookup entries they need.  The lookup is
+    the spans semi-joined to the referenced ids, then one partial+final
+    ``max_by`` per (conv, span_id) keeps the last occurrence in document
+    order — no window ranks the whole table.  At 100 TB the referenced
+    fraction is the working set, not the corpus."""
     spans = spans.withColumn(
         "ref_id",
         _detect_ref_col(F.col("question_latex"), F.col("answer_latex")),
-    )
-    # document-order last-wins representative per (conv, span_id) — the
-    # rank is structural, so compute it once
-    w = Window.partitionBy("conv_id", "span_id").orderBy(
-        F.desc("turn_start"), F.desc("head_seq")
-    )
-    spans = spans.withColumn(
-        "is_rep", F.row_number().over(w) == 1
     ).localCheckpoint(eager=False)
-
     with_ref = spans.filter(F.col("ref_id").isNotNull())
-    # lookup working set: only reps whose span_id is actually referenced
+    # lookup working set: only ids that are actually referenced, each with
+    # its document-order last-wins representative
     needed = with_ref.select(
         "conv_id", F.col("ref_id").alias("span_id")
     ).distinct()
+    rep = F.max_by(F.struct("answer_latex", "ref_id"), _doc_order())
     static_lookup = (
-        spans.filter("is_rep")
-        .select("conv_id", "span_id", "answer_latex", "ref_id")
-        .join(needed, ["conv_id", "span_id"], "left_semi")
+        spans.join(needed, ["conv_id", "span_id"], "left_semi")
+        .groupBy("conv_id", "span_id")
+        .agg(rep.alias("rep"))
+        .select("conv_id", "span_id", "rep.answer_latex", "rep.ref_id")
         .localCheckpoint(eager=False)
     )
 
@@ -401,8 +397,7 @@ def _resolve_references(spans: DataFrame) -> DataFrame:
     )
     for _ in range(MAX_DEPTH - 1):
         lookup = attach(static_lookup, lookup) \
-            .select("conv_id", "span_id", "resolved") \
-            .localCheckpoint(eager=False)
+            .select("conv_id", "span_id", "resolved")
     with_ref = attach(with_ref, lookup)
 
     no_ref = spans.filter(F.col("ref_id").isNull()).withColumn(
@@ -482,9 +477,9 @@ def extract_from_parsed(
     code the batch path runs — compacts it.  tests/test_streaming.py's
     end-to-end gate asserts stream-parse + this == run_extract row for
     row."""
-    # the stitch consumes `parsed` through THREE exchanges (window,
-    # block-last agg, block set); without materialization each branch
-    # re-runs the parse — measured as 3× the most expensive stage.
+    # the stitch consumes `parsed` through TWO exchanges (window,
+    # block-carry agg); without materialization each branch re-runs the
+    # parse, the most expensive stage (measured 3× with three branches).
     # Eager so AQE's concurrent stage-materialization jobs can't race
     # into duplicate computes.
     parsed = parsed.localCheckpoint(eager=True)

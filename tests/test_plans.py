@@ -384,3 +384,75 @@ def test_source_overlap_folds_shingles_once_and_broadcasts_totals(spark):
     # and the second totals broadcast is the first one, reused
     assert "BroadcastExchange HashedRelationBroadcastMode" in \
         final.split("ReusedExchange", 1)[1]
+
+
+def _extraction_input(spark):
+    """The 60-conversation fixture, parsed and materialized."""
+    from pdf_extractor_spark.job.extract import parse_transcripts
+    from pdf_extractor_spark.queries.extraction import transcripts_df
+
+    tdf = transcripts_df(spark, n_convs=60, seed=99)
+    return tdf, parse_transcripts(tdf).localCheckpoint(eager=True)
+
+
+def test_resolve_references_plans_no_window(spark, monkeypatch):
+    """The lookup representative is a partial+final max_by over the
+    semi-join-reduced spans, never a window that sorts the whole span
+    table.  localCheckpoint is stubbed to identity while resolving, so the
+    executed plan shows the subplans it would otherwise hide behind RDD
+    scans."""
+    from pdf_extractor_spark.job import extract as X
+
+    B = X.DEFAULT_BLOCK_SIZE
+    _, parsed = _extraction_input(spark)
+    merged = X._merge_block_edges(
+        X._link_and_stitch_blocks(parsed, B), B
+    ).localCheckpoint(eager=True)
+    monkeypatch.setattr(
+        type(merged), "localCheckpoint", lambda self, **kw: self
+    )
+    out = X._resolve_references(merged)
+    out.collect()
+    final = out._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "simple"
+        )
+    )
+    assert "isFinalPlan=true" in final
+    assert "Window" not in final
+    assert "partial_max_by(" in final
+
+
+def test_block_carry_is_partial_max_by(spark):
+    """The level-1 block carry is one partial+final max_by aggregate (a
+    SortAggregate, as its value is a string): the partial side runs in
+    every scan task, so no single task sees a whole conversation."""
+    from pdf_extractor_spark.job import extract as X
+
+    _, parsed = _extraction_input(spark)
+    plan = X._link_and_stitch_blocks(parsed, 3)._jdf.queryExecution() \
+        .explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode
+            .fromString("simple")
+        )
+    assert "functions=[partial_max_by(" in plan
+    assert "functions=[max_by(" in plan
+
+
+def test_warm_run_extract_job_count(spark):
+    """One warm run_extract over the 60-conversation fixture launches 17
+    Spark jobs (query stages, checkpoints and the collect).  A new
+    exchange or checkpoint in the flagship shows up here."""
+    from pdf_extractor_spark.job.extract import run_extract
+
+    tdf, _ = _extraction_input(spark)
+    run_extract(tdf).collect()  # cold: ships the package to the workers
+    sc = spark.sparkContext
+    sc.setJobGroup("warm_run_extract", "warm_run_extract")
+    try:
+        run_extract(tdf).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("warm_run_extract")
+    assert len(jobs) == 17
