@@ -4,8 +4,7 @@ Spark-native (SURVEY.md §3.2).
 Reference parity (/root/reference/src/evaluator.py):
 
 - remaining-reference sweep       ≙ :132-148 (REF_PATTERNS :53-69) — here
-  the shared core regexes, JVM-side via regexp builtin where possible and
-  the exact ``detect_ref`` core otherwise;
+  the core's ``REF_ID_PATTERNS`` through ``jvm_regex``;
 - answer similarity               ≙ :109-130 SequenceMatcher ratio over
   :80-107 normalize_latex — difflib has no JVM equivalent, so it runs as
   an Arrow-batch pandas UDF (metrics-only path, per SURVEY §2.11);
@@ -35,15 +34,13 @@ from pdf_extractor_spark.core.normalize import (
     structure_similarity,
     text_similarity,
 )
+from pdf_extractor_spark.job.extract import _REF_ALTERNATION, jvm_regex
 from pdf_extractor_spark.queries.base import rhu
 from pdf_extractor_spark.core.refs import CONTEXT_OPEN
 
-_REMAINING_REF_PAT = (
-    r"(?:using|from|by|see|as in)\s+"
-    r"(?:the result of |the result from |problem |question |exercise |part )?"
-    r"\d+\.\d+[a-z]?\b"
-    r"|\b(?:problem|question|exercise)\s+\d+\.\d+[a-z]?\b"
-)
+# the core reference patterns, matched case-sensitively on lowercased text
+# as the reference sweep does; read at call time
+_REMAINING_REF_PAT = _REF_ALTERNATION
 
 
 _SIM_SCHEMA = T.StructType([
@@ -102,12 +99,7 @@ def evaluate_spans(spans: DataFrame) -> DataFrame:
     n_dollar = F.length("text") - F.length(F.replace("text", F.lit("$"), F.lit("")))
 
     qa = qa.withColumn(
-        "has_remaining_refs",
-        # (?U) aligns Java \s/\d/\b with the Unicode-aware Python mirror
-        # (scripts/gen_expected.py uses the bare pattern with `re`)
-        F.size(
-            F.regexp_extract_all(full, F.lit("(?U)" + _REMAINING_REF_PAT), 0)
-        ) > 0,
+        "has_remaining_refs", full.rlike(jvm_regex(_REMAINING_REF_PAT))
     ).withColumn(
         "latex_well_formed",
         (n_braces_open == n_braces_close) & (n_dollar % 2 == 0),

@@ -31,6 +31,9 @@ orchestrates.
 
 from __future__ import annotations
 
+import functools
+import re
+import unicodedata
 from typing import Iterator
 
 import pandas as pd
@@ -39,13 +42,19 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pdf_extractor_spark.core.normalize import _SANITIZE_TABLE
+from pdf_extractor_spark.core.normalize import (
+    _SANITIZE_TABLE,
+    _SOLUTION_BOLD,
+    _SOLUTION_PLAIN,
+)
 from pdf_extractor_spark.core.parse_turn import parse_turn
 from pdf_extractor_spark.core.refs import (
     CONTEXT_CLOSE,
     CONTEXT_OPEN,
     MAX_DEPTH,
+    REF_ID_PATTERNS,
 )
+from pdf_extractor_spark.core.structure import QA_ID_RE
 
 PARSED_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
@@ -72,6 +81,29 @@ OUTPUT_SCHEMA = T.StructType([
     T.StructField("n_fragments", T.IntegerType()),
     T.StructField("had_reference", T.BooleanType()),
 ])
+
+_PY_WORD = r"[\p{L}\p{N}_]"
+_JVM_ESCAPES = {
+    "b": rf"(?:(?<={_PY_WORD})(?!{_PY_WORD})|(?<!{_PY_WORD})(?={_PY_WORD}))",
+    "s": r"[\s\x1c-\x1f]",
+}
+
+
+def jvm_regex(source: str, ignorecase: bool = False) -> str:
+    r"""The Java pattern meaning what Python ``re`` pattern ``source``
+    means; every JVM regex that re-expresses a core rule is built by it.
+
+    ``(?U)`` gives Java Python's Unicode ``\d`` (Nd); ``ignorecase`` adds
+    ``(?i)``.  Python's ``\w`` is exactly ``[\p{L}\p{N}_]`` (Java's
+    ``(?U)\w`` adds combining marks and ZWJ and drops ``²``) and its ``\s``
+    is White_Space plus U+001C–U+001F (Java's lacks those four), so the
+    escape pairs ``\b`` and ``\s`` are rewritten; an escaped backslash, as
+    in ``\\textbf``, is left alone.  Java 17 knows Unicode 13, Python 3.11
+    Unicode 14: the 525 letters and 10 Tangsa digits new in 14 still fork.
+    """
+    body = re.sub(r"\\(.)", lambda m: _JVM_ESCAPES.get(m[1], m[0]), source)
+    return ("(?iU)" if ignorecase else "(?U)") + body
+
 
 # conversations shorter than the block are untouched by this knob; longer
 # ones split into parallel block tasks + a cheap edge merge.  8192 beat
@@ -285,41 +317,23 @@ def _merge_block_edges(spans: DataFrame, block_size: int) -> DataFrame:
 # Stage 3 — bounded-fixpoint reference resolution (3 left joins)
 # --------------------------------------------------------------------------
 
-# JVM form of core.refs.detect_ref (REF_ID_PATTERNS, refs.py): both
-# patterns end with the id capture group at a zero-width boundary, so the
-# group-1 start = match start + len(group 0) - len(group 1); comparing
-# those positions reproduces the reference's min-over-patterns-by-group-
-# start rule exactly (ties keep pattern 1 ≙ the strict `<` in detect_ref).
-# Equivalence with the Python core is pinned by tests/test_job_extract.py
-# (full-output equality) and test_jvm_detect_parity.
-_JVM_REF_P1 = (
-    r"(?iU)(?:using|from|by|see|as in)\s+"
-    r"(?:the result of |the result from |problem |question |exercise "
-    r"|part )?"
-    r"(\d+\.\d+[a-z]?)\b"
-)
-_JVM_REF_P2 = r"(?iU)\b(?:problem|question|exercise)\s+(\d+\.\d+[a-z]?)\b"
+# The core's reference patterns as one alternation; each captures only its
+# id, so pattern k's id is group k.
+_REF_ALTERNATION = "|".join(p.pattern for p in REF_ID_PATTERNS)
 
 
 def _detect_ref_col(question: Column, answer: Column) -> Column:
+    """JVM ``core.refs.detect_ref``.  The leftmost alternation match is the
+    core's smallest-group-1-start pick: before its id a match holds only
+    cue words and whitespace, no digit, so an id of the other pattern
+    cannot start inside the earlier match before its id (at worst both
+    share that id), and no two matches start at one position, as the two
+    patterns' cue words begin with different letters."""
     text = F.concat(question, F.lit(" "), answer)
-
-    def gpos_and_id(pat: str):
-        mpos = F.regexp_instr(text, F.lit(pat))
-        g0 = F.regexp_extract(text, pat, 0)
-        g1 = F.regexp_extract(text, pat, 1)
-        gpos = F.when(
-            mpos > 0, mpos + F.length(g0) - F.length(g1)
-        ).otherwise(F.lit(None).cast("int"))
-        return gpos, g1
-
-    gp1, id1 = gpos_and_id(_JVM_REF_P1)
-    gp2, id2 = gpos_and_id(_JVM_REF_P2)
-    return (
-        F.when(gp1.isNotNull() & (gp2.isNull() | (gp1 <= gp2)), id1)
-        .when(gp2.isNotNull(), id2)
-        .otherwise(F.lit(None).cast("string"))
-    )
+    pat = jvm_regex(_REF_ALTERNATION, ignorecase=True)
+    ids = [F.regexp_extract(text, pat, g)
+           for g in range(1, len(REF_ID_PATTERNS) + 1)]
+    return F.nullif(F.concat(*ids), F.lit(""))
 
 
 def _resolve_references(spans: DataFrame) -> DataFrame:
@@ -411,15 +425,11 @@ def _resolve_references(spans: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def _strip_prefix_col(col: Column) -> Column:
-    """JVM-side strip_solution_prefix (latex_generator.py:187-193 parity:
-    strip → drop one leading Solution marker → strip), as two anchored
-    regexes so no Python pass runs in the sink path.  Byte-equality with
-    the core function is pinned by the oracle tests."""
-    # (?U): Java \s is ASCII-only by default, but the core Python
-    # strip()/\s are Unicode-aware — '\xa0Solution. foo' must strip on
-    # both sides or the per-turn equality contract forks on real text.
-    lead = r"(?U)^\s*(?:\\textbf\{Solution\.\}|Solution\.)?\s*"
-    return F.regexp_replace(F.regexp_replace(col, lead, ""), r"(?U)\s+$", "")
+    """JVM ``core.normalize.strip_solution_prefix`` (strip → drop one
+    leading Solution marker → strip) in one regex pass: the lead and the
+    trailing whitespace never overlap."""
+    marker = f"(?:{re.escape(_SOLUTION_BOLD)}|{re.escape(_SOLUTION_PLAIN)})"
+    return F.regexp_replace(col, jvm_regex(rf"^\s*{marker}?\s*|\s+$"), "")
 
 
 def _finalize(spans: DataFrame) -> DataFrame:
@@ -437,29 +447,32 @@ def _finalize(spans: DataFrame) -> DataFrame:
     )
 
 
+@functools.cache
+def _nd_digits() -> tuple[str, str]:
+    """(every Unicode Nd digit, its ASCII digit) as two translate strings.
+    Built on first use, not at import: the code point scan takes 0.1-0.2 s
+    and Python workers import this module too."""
+    nd = [c for c in map(chr, range(0x110000))
+          if unicodedata.decimal(c, None) is not None]
+    return "".join(nd), "".join(str(unicodedata.decimal(c)) for c in nd)
+
+
 def sort_key_columns(df: DataFrame, id_col: str = "span_id") -> DataFrame:
-    """O1/O2 sort-key derivation, Spark-native (regexp_extract ×3 with the
-    reference's (0.0, 0.0, id) fallback — pipeline.py:92-127)."""
-    pat = r"^(\d+)\.(\d+)([a-z]*)$"
-    sid = F.trim(F.col(id_col))
-    matched = F.regexp_extract(sid, pat, 1) != ""
-    return (
-        df.withColumn(
-            "sk_chapter",
-            F.when(matched, F.regexp_extract(sid, pat, 1).cast("double"))
-            .otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "sk_question",
-            F.when(matched, F.regexp_extract(sid, pat, 2).cast("double"))
-            .otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "sk_suffix",
-            F.when(matched, F.regexp_extract(sid, pat, 3))
-            .otherwise(F.col(id_col)),
-        )
+    """O1/O2 sort keys ≙ ``core.structure.parse_qa_id``: ``QA_ID_RE`` over
+    the stripped id, with the (0.0, 0.0, id) fallback.  Every Nd digit maps
+    to ASCII first: ``float`` reads any Nd digit, Spark's cast only ASCII."""
+    stripped = F.regexp_replace(F.col(id_col), jvm_regex(r"^\s+|\s+$"), "")
+    sid = F.translate(stripped, *_nd_digits())
+    pat = jvm_regex(QA_ID_RE.pattern)
+    chapter, question, suffix = (
+        F.regexp_extract(sid, pat, g) for g in (1, 2, 3)
     )
+    matched = chapter != ""
+    return df.withColumns({
+        "sk_chapter": F.when(matched, chapter.cast("double")).otherwise(0.0),
+        "sk_question": F.when(matched, question.cast("double")).otherwise(0.0),
+        "sk_suffix": F.when(matched, suffix).otherwise(F.col(id_col)),
+    })
 
 
 # --------------------------------------------------------------------------

@@ -22,7 +22,8 @@ Reference parity (file:line = /root/reference/src unless noted):
   (pipeline.py:17-89) applied to time gaps — running-sum boundary ids.
 - running_total        ≙ W2 running aggregate over ordered partition.
 - sort_key             ≙ O1/O2 parse_qa_id numeric+suffix ordering
-  (pipeline.py:92-127) with the (0,0,id) fallback.
+  (pipeline.py:92-127) with the (0,0,id) fallback — the flagship's own
+  ``sort_key_columns``.
 - explode_tokens       ≙ E1/E2 nested→flat explode (pipeline.py:267-287).
 - group_concat         ≙ A6/T8 ordered collect_list + join
   (pipeline.py:227-243).
@@ -37,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pdf_extractor_spark.core.structure import QA_ID_RE
+from pdf_extractor_spark.job.extract import sort_key_columns
 from pdf_extractor_spark.queries.base import Q, load, rhu, rhu_sql
 
 
@@ -287,9 +290,6 @@ FROM events
 
 # ----------------------------------------------------------- sort-key parse
 
-_QA_ID_PAT = r"^(\d+)\.(\d+)([a-z]*)$"
-
-
 def _sort_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load(spark, sf_dir, "part")
     suffix = F.element_at(
@@ -302,23 +302,12 @@ def _sort_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("p_partkey") % 30 + 1).cast("string"),
         suffix,
     )
-    df = p.select("p_partkey", qa.alias("qa_id"))
-    matched = F.regexp_extract("qa_id", _QA_ID_PAT, 1) != ""
-    df = df.select(
-        "p_partkey",
-        "qa_id",
-        F.when(matched, F.regexp_extract("qa_id", _QA_ID_PAT, 1)
-               .cast("double")).otherwise(0.0).alias("sk_chapter"),
-        F.when(matched, F.regexp_extract("qa_id", _QA_ID_PAT, 2)
-               .cast("double")).otherwise(0.0).alias("sk_question"),
-        F.when(matched, F.regexp_extract("qa_id", _QA_ID_PAT, 3))
-        .otherwise(F.col("qa_id")).alias("sk_suffix"),
-    )
+    df = sort_key_columns(p.select("p_partkey", qa.alias("qa_id")), "qa_id")
     w = Window.orderBy("sk_chapter", "sk_question", "sk_suffix", "p_partkey")
     return df.withColumn("rank", F.row_number().over(w))
 
 
-_SORT_KEY_SQL = f"""
+_SORT_KEY_SQL = """
 WITH ids AS (
   SELECT p_partkey,
          (p_partkey % 9 + 1)::VARCHAR || '.' || (p_partkey % 30 + 1)::VARCHAR
@@ -326,21 +315,21 @@ WITH ids AS (
   FROM part
 ), keys AS (
   SELECT p_partkey, qa_id,
-         CASE WHEN regexp_extract(qa_id, '{_QA_ID_PAT}', 1) <> ''
-              THEN CAST(regexp_extract(qa_id, '{_QA_ID_PAT}', 1) AS DOUBLE)
+         CASE WHEN regexp_extract(qa_id, '{pat}', 1) <> ''
+              THEN CAST(regexp_extract(qa_id, '{pat}', 1) AS DOUBLE)
               ELSE 0.0 END AS sk_chapter,
-         CASE WHEN regexp_extract(qa_id, '{_QA_ID_PAT}', 1) <> ''
-              THEN CAST(regexp_extract(qa_id, '{_QA_ID_PAT}', 2) AS DOUBLE)
+         CASE WHEN regexp_extract(qa_id, '{pat}', 1) <> ''
+              THEN CAST(regexp_extract(qa_id, '{pat}', 2) AS DOUBLE)
               ELSE 0.0 END AS sk_question,
-         CASE WHEN regexp_extract(qa_id, '{_QA_ID_PAT}', 1) <> ''
-              THEN regexp_extract(qa_id, '{_QA_ID_PAT}', 3)
+         CASE WHEN regexp_extract(qa_id, '{pat}', 1) <> ''
+              THEN regexp_extract(qa_id, '{pat}', 3)
               ELSE qa_id END AS sk_suffix
   FROM ids
 )
 SELECT *, row_number() OVER (
     ORDER BY sk_chapter, sk_question, sk_suffix, p_partkey) AS rank
 FROM keys
-"""
+""".format(pat=QA_ID_RE.pattern)
 
 
 # ---------------------------------------------------------------- explode

@@ -456,3 +456,43 @@ def test_warm_run_extract_job_count(spark):
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup("warm_run_extract")
     assert len(jobs) == 17
+
+
+def test_detect_ref_plans_one_extract_per_pattern(spark):
+    """The reference detector is one alternation of the core patterns: one
+    regexp_extract per pattern's id group, and no match-position
+    arithmetic (regexp_instr)."""
+    from pyspark.sql import functions as F
+
+    from pdf_extractor_spark.core.refs import REF_ID_PATTERNS
+    from pdf_extractor_spark.job.extract import _detect_ref_col
+
+    spans = spark.range(4).select(
+        F.col("id").cast("string").alias("q"),
+        F.col("id").cast("string").alias("a"),
+    )
+    plan = spans.select(
+        _detect_ref_col(F.col("q"), F.col("a")).alias("ref_id")
+    )._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("regexp_extract(") == len(REF_ID_PATTERNS)
+    assert "regexp_instr" not in plan
+
+
+def test_remaining_refs_sweep_is_one_rlike(spark):
+    """evaluate's remaining-reference sweep is one RLIKE per span, not an
+    extract-all array whose size is tested."""
+    from pyspark.sql import functions as F
+
+    from pdf_extractor_spark.job.evaluate import evaluate_spans
+
+    spans = spark.range(4).select(
+        F.lit("c").alias("conv_id"),
+        F.col("id").cast("string").alias("span_id"),
+        F.col("id").cast("string").alias("question_latex"),
+        F.col("id").cast("string").alias("text"),
+        F.lit(False).alias("had_reference"),
+    )
+    plan = evaluate_spans(spans).select("has_remaining_refs") \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("RLIKE") == 1
+    assert "regexp_extract_all" not in plan
