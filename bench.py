@@ -37,7 +37,7 @@ HEADLINE = [
     "pricing_summary",      # hash agg over lineitem
     "lookup_join",          # broadcast join
     "sessionize",           # window gaps-and-islands
-    "sort_key",             # regex parse + global sort
+    "sort_key",             # parse_qa_id over Arrow + global sort
     "explode_tokens",       # explode + agg
     "sanitize_latex",       # 88-entry single-pass translate
     "ref_scan",             # regex sweep

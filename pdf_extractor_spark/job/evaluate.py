@@ -3,8 +3,9 @@ Spark-native (SURVEY.md §3.2).
 
 Reference parity (/root/reference/src/evaluator.py):
 
-- remaining-reference sweep       ≙ :132-148 (REF_PATTERNS :53-69) — here
-  the core's ``REF_ID_PATTERNS`` through ``jvm_regex``;
+- remaining-reference sweep       ≙ :132-148 (REF_PATTERNS :53-69) — the
+  core's ``REF_ID_PATTERNS`` searched by Python ``re`` in an Arrow-batch
+  pandas UDF, so no JVM regex restates them;
 - answer similarity               ≙ :109-130 SequenceMatcher ratio over
   :80-107 normalize_latex — difflib has no JVM equivalent, so it runs as
   an Arrow-batch pandas UDF (metrics-only path, per SURVEY §2.11);
@@ -23,6 +24,8 @@ The per-QA evaluation row mirrors the ``QAEvaluation`` model
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -34,13 +37,12 @@ from pdf_extractor_spark.core.normalize import (
     structure_similarity,
     text_similarity,
 )
-from pdf_extractor_spark.job.extract import _REF_ALTERNATION, jvm_regex
 from pdf_extractor_spark.queries.base import rhu
-from pdf_extractor_spark.core.refs import CONTEXT_OPEN
+from pdf_extractor_spark.core.refs import CONTEXT_OPEN, REF_ID_PATTERNS
 
 # the core reference patterns, matched case-sensitively on lowercased text
-# as the reference sweep does; read at call time
-_REMAINING_REF_PAT = _REF_ALTERNATION
+# as the reference sweep does; compiled when evaluate_spans is called
+_REMAINING_REF_PAT = "|".join(p.pattern for p in REF_ID_PATTERNS)
 
 
 _SIM_SCHEMA = T.StructType([
@@ -93,13 +95,22 @@ def evaluate_spans(spans: DataFrame) -> DataFrame:
         original.alias("original_text"),
     )
 
-    full = F.lower(F.concat_ws(" ", "question_latex", "original_text"))
+    pat = re.compile(_REMAINING_REF_PAT)
+
+    @F.pandas_udf(T.BooleanType())
+    def _remaining_refs(q: pd.Series, original: pd.Series) -> pd.Series:
+        return pd.Series([
+            pat.search(f"{a or ''} {b or ''}".lower()) is not None
+            for a, b in zip(q, original)
+        ], dtype=bool)
+
     n_braces_open = F.length("text") - F.length(F.replace("text", F.lit("{"), F.lit("")))
     n_braces_close = F.length("text") - F.length(F.replace("text", F.lit("}"), F.lit("")))
     n_dollar = F.length("text") - F.length(F.replace("text", F.lit("$"), F.lit("")))
 
     qa = qa.withColumn(
-        "has_remaining_refs", full.rlike(jvm_regex(_REMAINING_REF_PAT))
+        "has_remaining_refs",
+        _remaining_refs("question_latex", "original_text"),
     ).withColumn(
         "latex_well_formed",
         (n_braces_open == n_braces_close) & (n_dollar % 2 == 0),

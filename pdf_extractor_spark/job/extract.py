@@ -26,14 +26,14 @@ composes with the fragment-level fold (continuation fragments always have
 empty question text, so append-if-different degenerates to identity).
 
 Reference parity citations live in the core modules; this file only
-orchestrates.
+orchestrates.  Where a stage applies a core rule (the reference detector,
+the Solution-prefix strip, the id sort key) it runs the core function
+itself over Arrow batches (``pandas_udf``), so the job and the oracle
+cannot read one rule two ways.
 """
 
 from __future__ import annotations
 
-import functools
-import re
-import unicodedata
 from typing import Iterator
 
 import pandas as pd
@@ -44,17 +44,16 @@ from pyspark.sql import types as T
 
 from pdf_extractor_spark.core.normalize import (
     _SANITIZE_TABLE,
-    _SOLUTION_BOLD,
-    _SOLUTION_PLAIN,
+    strip_solution_prefix,
 )
 from pdf_extractor_spark.core.parse_turn import parse_turn
 from pdf_extractor_spark.core.refs import (
     CONTEXT_CLOSE,
     CONTEXT_OPEN,
     MAX_DEPTH,
-    REF_ID_PATTERNS,
+    detect_ref,
 )
-from pdf_extractor_spark.core.structure import QA_ID_RE
+from pdf_extractor_spark.core.structure import parse_qa_id
 
 PARSED_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
@@ -81,29 +80,6 @@ OUTPUT_SCHEMA = T.StructType([
     T.StructField("n_fragments", T.IntegerType()),
     T.StructField("had_reference", T.BooleanType()),
 ])
-
-_PY_WORD = r"[\p{L}\p{N}_]"
-_JVM_ESCAPES = {
-    "b": rf"(?:(?<={_PY_WORD})(?!{_PY_WORD})|(?<!{_PY_WORD})(?={_PY_WORD}))",
-    "s": r"[\s\x1c-\x1f]",
-}
-
-
-def jvm_regex(source: str, ignorecase: bool = False) -> str:
-    r"""The Java pattern meaning what Python ``re`` pattern ``source``
-    means; every JVM regex that re-expresses a core rule is built by it.
-
-    ``(?U)`` gives Java Python's Unicode ``\d`` (Nd); ``ignorecase`` adds
-    ``(?i)``.  Python's ``\w`` is exactly ``[\p{L}\p{N}_]`` (Java's
-    ``(?U)\w`` adds combining marks and ZWJ and drops ``²``) and its ``\s``
-    is White_Space plus U+001C–U+001F (Java's lacks those four), so the
-    escape pairs ``\b`` and ``\s`` are rewritten; an escaped backslash, as
-    in ``\\textbf``, is left alone.  Java 17 knows Unicode 13, Python 3.11
-    Unicode 14: the 525 letters and 10 Tangsa digits new in 14 still fork.
-    """
-    body = re.sub(r"\\(.)", lambda m: _JVM_ESCAPES.get(m[1], m[0]), source)
-    return ("(?iU)" if ignorecase else "(?U)") + body
-
 
 # conversations shorter than the block are untouched by this knob; longer
 # ones split into parallel block tasks + a cheap edge merge.  8192 beat
@@ -317,23 +293,13 @@ def _merge_block_edges(spans: DataFrame, block_size: int) -> DataFrame:
 # Stage 3 — bounded-fixpoint reference resolution (3 left joins)
 # --------------------------------------------------------------------------
 
-# The core's reference patterns as one alternation; each captures only its
-# id, so pattern k's id is group k.
-_REF_ALTERNATION = "|".join(p.pattern for p in REF_ID_PATTERNS)
-
-
-def _detect_ref_col(question: Column, answer: Column) -> Column:
-    """JVM ``core.refs.detect_ref``.  The leftmost alternation match is the
-    core's smallest-group-1-start pick: before its id a match holds only
-    cue words and whitespace, no digit, so an id of the other pattern
-    cannot start inside the earlier match before its id (at worst both
-    share that id), and no two matches start at one position, as the two
-    patterns' cue words begin with different letters."""
-    text = F.concat(question, F.lit(" "), answer)
-    pat = jvm_regex(_REF_ALTERNATION, ignorecase=True)
-    ids = [F.regexp_extract(text, pat, g)
-           for g in range(1, len(REF_ID_PATTERNS) + 1)]
-    return F.nullif(F.concat(*ids), F.lit(""))
+@F.pandas_udf(T.StringType())
+def _detect_ref_col(question: pd.Series, answer: pd.Series) -> pd.Series:
+    """``core.refs.detect_ref`` over an Arrow batch; NULL in, NULL out."""
+    return pd.Series([
+        None if q is None or a is None else detect_ref(q, a)
+        for q, a in zip(question, answer)
+    ], dtype=object)
 
 
 def _resolve_references(spans: DataFrame) -> DataFrame:
@@ -424,12 +390,12 @@ def _resolve_references(spans: DataFrame) -> DataFrame:
 # Stage 4 — sink normalization + ordering keys
 # --------------------------------------------------------------------------
 
-def _strip_prefix_col(col: Column) -> Column:
-    """JVM ``core.normalize.strip_solution_prefix`` (strip → drop one
-    leading Solution marker → strip) in one regex pass: the lead and the
-    trailing whitespace never overlap."""
-    marker = f"(?:{re.escape(_SOLUTION_BOLD)}|{re.escape(_SOLUTION_PLAIN)})"
-    return F.regexp_replace(col, jvm_regex(rf"^\s*{marker}?\s*|\s+$"), "")
+@F.pandas_udf(T.StringType())
+def _strip_prefix_col(answer: pd.Series) -> pd.Series:
+    """``core.normalize.strip_solution_prefix`` over an Arrow batch."""
+    return pd.Series([
+        None if a is None else strip_solution_prefix(a) for a in answer
+    ], dtype=object)
 
 
 def _finalize(spans: DataFrame) -> DataFrame:
@@ -447,32 +413,31 @@ def _finalize(spans: DataFrame) -> DataFrame:
     )
 
 
-@functools.cache
-def _nd_digits() -> tuple[str, str]:
-    """(every Unicode Nd digit, its ASCII digit) as two translate strings.
-    Built on first use, not at import: the code point scan takes 0.1-0.2 s
-    and Python workers import this module too."""
-    nd = [c for c in map(chr, range(0x110000))
-          if unicodedata.decimal(c, None) is not None]
-    return "".join(nd), "".join(str(unicodedata.decimal(c)) for c in nd)
+_SORT_KEY_SCHEMA = T.StructType([
+    T.StructField("sk_chapter", T.DoubleType()),
+    T.StructField("sk_question", T.DoubleType()),
+    T.StructField("sk_suffix", T.StringType()),
+])
+
+
+@F.pandas_udf(_SORT_KEY_SCHEMA)
+def _sort_key_col(ids: pd.Series) -> pd.DataFrame:
+    """``core.structure.parse_qa_id`` over an Arrow batch; a NULL id takes
+    the (0.0, 0.0, id) fallback."""
+    return pd.DataFrame(
+        [(0.0, 0.0, None) if i is None else parse_qa_id(i) for i in ids],
+        columns=_SORT_KEY_SCHEMA.names,
+    )
 
 
 def sort_key_columns(df: DataFrame, id_col: str = "span_id") -> DataFrame:
-    """O1/O2 sort keys ≙ ``core.structure.parse_qa_id``: ``QA_ID_RE`` over
-    the stripped id, with the (0.0, 0.0, id) fallback.  Every Nd digit maps
-    to ASCII first: ``float`` reads any Nd digit, Spark's cast only ASCII."""
-    stripped = F.regexp_replace(F.col(id_col), jvm_regex(r"^\s+|\s+$"), "")
-    sid = F.translate(stripped, *_nd_digits())
-    pat = jvm_regex(QA_ID_RE.pattern)
-    chapter, question, suffix = (
-        F.regexp_extract(sid, pat, g) for g in (1, 2, 3)
-    )
-    matched = chapter != ""
-    return df.withColumns({
-        "sk_chapter": F.when(matched, chapter.cast("double")).otherwise(0.0),
-        "sk_question": F.when(matched, question.cast("double")).otherwise(0.0),
-        "sk_suffix": F.when(matched, suffix).otherwise(F.col(id_col)),
-    })
+    """O1/O2 sort keys ≙ ``core.structure.parse_qa_id`` as the columns
+    ``sk_chapter``, ``sk_question`` and ``sk_suffix``."""
+    from pdf_extractor_spark.shipping import ensure_workers
+
+    ensure_workers(df.sparkSession)
+    key = _sort_key_col(F.col(id_col))
+    return df.withColumns({c: key[c] for c in _SORT_KEY_SCHEMA.names})
 
 
 # --------------------------------------------------------------------------
@@ -490,6 +455,9 @@ def extract_from_parsed(
     code the batch path runs — compacts it.  tests/test_streaming.py's
     end-to-end gate asserts stream-parse + this == run_extract row for
     row."""
+    from pdf_extractor_spark.shipping import ensure_workers
+
+    ensure_workers(parsed.sparkSession)
     # the stitch consumes `parsed` through TWO exchanges (window,
     # block-carry agg); without materialization each branch re-runs the
     # parse, the most expensive stage (measured 3× with three branches).

@@ -210,17 +210,3 @@ def merge_upsert(
         _release_lock(lock, lock_token)
     return snap
 
-
-def latest_reviews_view(reviews: DataFrame, key: str = "qa_id",
-                        ts_col: str = "reviewed_at") -> DataFrame:
-    """Batch-collapse a review log to newest-per-key (the reference's
-    overlay semantics when updates arrive as an append log rather than a
-    pre-deduped set)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(key).orderBy(F.desc(ts_col))
-    return (
-        reviews.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )

@@ -23,7 +23,8 @@ Reference parity (file:line = /root/reference/src unless noted):
 - running_total        ≙ W2 running aggregate over ordered partition.
 - sort_key             ≙ O1/O2 parse_qa_id numeric+suffix ordering
   (pipeline.py:92-127) with the (0,0,id) fallback — the flagship's own
-  ``sort_key_columns``.
+  ``sort_key_columns``, which runs ``core.structure.parse_qa_id`` over
+  Arrow batches; the DuckDB oracle formats ``QA_ID_RE`` into SQL.
 - explode_tokens       ≙ E1/E2 nested→flat explode (pipeline.py:267-287).
 - group_concat         ≙ A6/T8 ordered collect_list + join
   (pipeline.py:227-243).

@@ -1,5 +1,8 @@
-"""JVM reference detection must agree with the Python core detector on
-every span of a broad generated corpus plus adversarial literals."""
+"""The job's reference detection, Solution strip, remaining-ref sweep and
+sort key must agree with the Python core on every span of a broad
+generated corpus plus adversarial literals.  The job runs the core
+functions over Arrow batches, so these cases pin that no second regex
+engine's reading of a core pattern creeps back in."""
 
 from __future__ import annotations
 
@@ -22,8 +25,8 @@ ADVERSARIAL = [
     ("version 10.13 of the doc", "see part 2.1"),
     ("as in 8.01c", ""),
     ("x" * 5000 + " by 3.3", ""),
-    # Unicode boundaries: Python \s/\d/\b are Unicode-aware; JVM side
-    # must carry (?U) or these fork (ADVICE r1)
+    # Unicode boundaries: Python \s/\d/\b are Unicode-aware; a JVM
+    # restatement must carry (?U) or these fork (ADVICE r1)
     ("see problem\u00a02.3", ""),        # NBSP after cue word
     ("using exercise\u20094.2", ""),     # thin space
     ("problem \u0664.\u0665 is cited", ""),  # Arabic-Indic digits
@@ -31,11 +34,16 @@ ADVERSARIAL = [
     ("by 3.4\u00e9xtra", ""),            # \\b before accented letter
     ("problem\u30004.4", ""),            # ideographic space
     # Python \w is [\p{L}\p{N}_] and \s adds U+001C-U+001F: Java's (?U)
-    # classes differ on these, so \b and \s need jvm_regex's rewrite
+    # classes differ on these, so a Java restatement of \b and \s forks
     ("see 1.2e\u0301 then", ""),        # combining acute: not \w in Python
     ("see\x1c1.2", ""),                 # file separator is \s in Python
     ("problem 3.4\u00b2", ""),          # superscript two is \w in Python
     ("by 5.6\u200d", ""),               # ZWJ: not \w in Python
+    # Unicode 14 (Python 3.11) vs Unicode 13 (Java 17): U+0870 is a letter
+    # and the Tangsa digits U+16AC0-U+16AC9 are Nd only in Python's tables
+    ("see 1.2\u0870 then", ""),
+    ("by 3.4\u0870", ""),
+    ("problem \U00016ac0.\U00016ac1 is cited", ""),
 ]
 
 
@@ -196,3 +204,31 @@ def test_sort_key_columns_match_parse_qa_id(spark):
     for r in rows:
         got = (r.sk_chapter, r.sk_question, r.sk_suffix)
         assert got == parse_qa_id(r.qa_id), (r.qa_id, got)
+
+
+def test_core_rule_udf_paths_ship_the_package(spark, monkeypatch):
+    """The UDF paths that do not pass through parse_transcripts (the
+    streaming compactor, the sort_key query) ship the package to the
+    Python workers themselves."""
+    from pdf_extractor_spark import shipping
+    from pdf_extractor_spark.job import extract as X
+
+    calls = []
+    real = shipping.ensure_workers
+
+    def record(session):
+        calls.append(session)
+        real(session)
+
+    monkeypatch.setattr(shipping, "ensure_workers", record)
+    ids = spark.createDataFrame([("2.18a",)], "qa_id string")
+    X.sort_key_columns(ids, "qa_id")
+    assert calls == [ids.sparkSession]
+
+    calls.clear()
+    parsed = spark.createDataFrame(
+        [("c", 0, 0, "qa", "1.1", None, "q", "a", False, False)],
+        X.PARSED_SCHEMA,
+    )
+    X.extract_from_parsed(parsed)
+    assert parsed.sparkSession in calls

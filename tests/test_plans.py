@@ -458,29 +458,46 @@ def test_warm_run_extract_job_count(spark):
     assert len(jobs) == 17
 
 
-def test_detect_ref_plans_one_extract_per_pattern(spark):
-    """The reference detector is one alternation of the core patterns: one
-    regexp_extract per pattern's id group, and no match-position
-    arithmetic (regexp_instr)."""
-    from pyspark.sql import functions as F
-
-    from pdf_extractor_spark.core.refs import REF_ID_PATTERNS
-    from pdf_extractor_spark.job.extract import _detect_ref_col
-
-    spans = spark.range(4).select(
-        F.col("id").cast("string").alias("q"),
-        F.col("id").cast("string").alias("a"),
-    )
-    plan = spans.select(
-        _detect_ref_col(F.col("q"), F.col("a")).alias("ref_id")
-    )._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("regexp_extract(") == len(REF_ID_PATTERNS)
-    assert "regexp_instr" not in plan
+def _python_nodes(plan: str) -> list[str]:
+    """The UDF list of each ArrowEvalPython node in a plan string's final
+    plan (a UDF argument may hold a newline, so nodes are not lines)."""
+    final = plan.split("== Initial Plan ==")[0]
+    return [node.split("], [pythonUDF")[0]
+            for node in final.split("ArrowEvalPython [")[1:]]
 
 
-def test_remaining_refs_sweep_is_one_rlike(spark):
-    """evaluate's remaining-reference sweep is one RLIKE per span, not an
-    extract-all array whose size is tested."""
+def test_run_extract_applies_core_rules_in_python_not_jvm_regex(
+    spark, monkeypatch
+):
+    """The detector, the Solution strip and the sort key run as the core
+    functions over Arrow batches: no regexp_ expression and no RLIKE
+    anywhere in run_extract (localCheckpoint stubbed to identity so the
+    detector's subplan is visible), and the finalize projection is one
+    ArrowEvalPython node per union branch (one Python worker per task)
+    carrying both the strip and the sort-key UDF."""
+    from pdf_extractor_spark.job.extract import run_extract
+
+    tdf, _ = _extraction_input(spark)
+    out = run_extract(tdf)
+    out.collect()
+    final = out._jdf.queryExecution().executedPlan().toString()
+    nodes = _python_nodes(final)
+    assert len(nodes) == 2
+    for node in nodes:
+        assert "_strip_prefix_col(" in node and "_sort_key_col(" in node
+
+    with monkeypatch.context() as m:
+        m.setattr(type(tdf), "localCheckpoint", lambda self, **kw: self)
+        whole = run_extract(tdf)._jdf.queryExecution().executedPlan() \
+            .toString()
+    assert any("_detect_ref_col(" in n for n in _python_nodes(whole))
+    assert "regexp_" not in whole and "RLIKE" not in whole
+    assert "BatchEvalPython" not in whole
+
+
+def test_remaining_refs_sweep_is_arrow_python(spark):
+    """evaluate's remaining-reference sweep is the core patterns searched
+    by Python re in an ArrowEvalPython node, with no JVM regex."""
     from pyspark.sql import functions as F
 
     from pdf_extractor_spark.job.evaluate import evaluate_spans
@@ -492,7 +509,7 @@ def test_remaining_refs_sweep_is_one_rlike(spark):
         F.col("id").cast("string").alias("text"),
         F.lit(False).alias("had_reference"),
     )
-    plan = evaluate_spans(spans).select("has_remaining_refs") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("RLIKE") == 1
-    assert "regexp_extract_all" not in plan
+    plan = evaluate_spans(spans)._jdf.queryExecution().executedPlan() \
+        .toString()
+    assert any("_remaining_refs(" in n for n in _python_nodes(plan))
+    assert "regexp_" not in plan and "RLIKE" not in plan

@@ -13,7 +13,6 @@ from pdf_extractor_spark.job.upsert import (
     ConcurrentWriteError,
     _read_pointer,
     force_unlock,
-    latest_reviews_view,
     merge_upsert,
     read_table,
 )
@@ -168,15 +167,6 @@ def test_release_after_force_unlock_spares_new_writers_lock(
     assert os.path.exists(path_b), "B's live lock must survive"
     _release_lock(path_b, token_b)
     assert not os.path.exists(path_b)
-
-
-def test_latest_reviews_view_collapses_log(spark):
-    log = spark.createDataFrame(
-        [("a", "rejected", 1), ("a", "accepted", 5), ("b", "skipped", 2)],
-        SCHEMA,
-    )
-    got = _rows(latest_reviews_view(log))
-    assert got == {("a", "accepted", 5), ("b", "skipped", 2)}
 
 
 def test_merge_plan_broadcasts_small_updates(spark, table_dir):
